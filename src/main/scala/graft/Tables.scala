@@ -87,6 +87,11 @@ object Tables {
         while (it.hasNext) if (!(it.next()._1 eq spark)) it.remove()
         if (relCache.size > cacheBound) relCache.clear()
       }
+      // Read as the files lie, with no repartition: a single-row-group
+      // file is one scan task. Measured negative: a round-robin
+      // repartition of such scans here doubled task CPU over the
+      // batch-analytics workload (local[4], sf0.1), and only the column
+      // profile (q92) got faster; its cost is fixed in Profile.profile.
       val df = normalizeTs(spark.read.parquet(path))
       relCache.put(key, df)
       df

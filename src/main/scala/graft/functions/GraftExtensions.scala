@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * expressions as session functions at build time, so SQL users get
-  * `graft_cosine_sim` / `graft_rolling_hash` without any runtime
-  * registration call:
+  * `graft_cosine_sim` / `graft_rolling_hash` / `graft_exact_sum` without
+  * any runtime registration call:
   *
   * {{{
   * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
@@ -30,6 +30,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[RollingHash].getName, RollingHash.NAME),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         RollingHash(exprs.head)))
+    ext.injectFunction((
+      FunctionIdentifier(ExactSum.NAME),
+      new ExpressionInfo(classOf[ExactSum].getName, ExactSum.NAME),
+      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+        ExactSum(exprs)))
     // §2.6 tier (c): the native as-of join's planner strategy, so sessions
     // built with the extensions plan AsOfJoinPlan without the runtime
     // experimental-strategies fallback.

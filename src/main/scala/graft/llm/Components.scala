@@ -777,7 +777,7 @@ object Components {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)"))).head
+        graft.ops.Exact.sum(xxhash64(col("src"), col("dst")))).head
       (r.getLong(0), r.getDecimal(1))
     }
     var e = edges.select(col("src"), col("dst"))

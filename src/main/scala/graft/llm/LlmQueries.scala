@@ -3489,8 +3489,8 @@ object LlmQueries {
         .agg(count(lit(1)).as("n_docs"),
           sum("w").cast("long").as("n_tokens"),
           sum("n_chars").cast("long").as("n_bytes"),
-          sum(xxhash64(col("text")).cast("decimal(38,0)"))
-            .cast("decimal(38,0)").cast("string").as("checksum"))
+          graft.ops.Exact.sum(xxhash64(col("text")))
+            .cast("string").as("checksum"))
         .orderBy("shard_id")
     }, Some(s"""
       WITH toks AS (SELECT doc_id, text AS tok, n_chars,

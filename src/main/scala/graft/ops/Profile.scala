@@ -2,23 +2,36 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** One-pass column profiler: per column — null count, exact distinct
   * count, min and max rendered to a normalized string — emitted as one
   * row per column. The data-quality sweep run before committing a new
   * source into a corpus.
   *
-  * Scale shape: ALL columns profile in a SINGLE aggregation pass over the
-  * table (then a metadata-sized explode pivots the 1-row aggregate to
-  * long form). Multiple exact count-distincts in one aggregate plan via
-  * Catalyst's Expand — one scan at the cost of an |specs|-way row
-  * multiplication in the shuffle, the standard one-pass/with-expand
-  * trade; swap `countDistinct` for `approx_count_distinct` when the exact
-  * count isn't worth that shuffle at 100 TB.
+  * Scale shape: ONE scan into a keyed aggregate on fixed-width buffers,
+  * then one small global aggregate and a metadata-sized explode to long
+  * form.
+  * 1. A `groupingSets(Seq(c1), …, Seq(cn))` count: Catalyst plans it as
+  *    Expand → HashAggregate, one (value, count) group per distinct
+  *    value of each column (the null value included), with LONG count
+  *    buffers only. The rows expand n-way before the map-side combine,
+  *    so the shuffle carries distinct values, not rows.
+  * 2. One global (keyless) aggregate over that table of distinct values:
+  *    n_nulls is the count of the column's null group, n_distinct counts
+  *    the column's non-null values in its own set, and min/max are taken
+  *    over those values.
+  * Putting countDistinct and string min/max in ONE aggregate instead
+  * expands every row n-way and, because a string buffer is not
+  * UnsafeRow-mutable, sorts the expanded rows into a keyed
+  * SortAggregate in one task.
   *
   * min/max are computed on the NATIVE column type (so ordering is the
   * type's, not lexicographic) and only then rendered through `fmt` —
-  * profile("9.0") < profile("10.0") stays numerically ordered.
+  * profile("9.0") < profile("10.0") stays numerically ordered. Grouping
+  * normalizes a float key (-0.0 groups as 0.0), so a float/double column
+  * also keeps the raw per-group min/max: the rendered extremes are the
+  * column's own values, as a plain min/max would see them.
   */
 object Profile {
   /** Column to profile; `fmt` renders the typed min/max aggregate to a
@@ -27,15 +40,32 @@ object Profile {
 
   def profile(df: DataFrame, specs: Seq[Spec]): DataFrame = {
     require(specs.nonEmpty, "profile of zero columns")
-    val aggs = specs.flatMap { sp =>
-      val c = col(sp.name)
-      Seq(
-        count(when(c.isNull, lit(1))).as(s"__nn_${sp.name}"),
-        countDistinct(c).as(s"__nd_${sp.name}"),
-        sp.fmt(min(c)).as(s"__mn_${sp.name}"),
-        sp.fmt(max(c)).as(s"__mx_${sp.name}"))
+    val cols = specs.map(sp => col(sp.name))
+    val isFloat = specs.map(sp => df.select(col(sp.name)).schema.head.dataType match {
+      case FloatType | DoubleType => true
+      case _ => false
+    })
+    val n = specs.length
+    // grouping_id bit (n-1-i) is 0 exactly in column i's own set.
+    def inSet(i: Int): Column = col("__gid") === lit((1L << n) - 1 - (1L << (n - 1 - i)))
+    val rawExtremes = specs.indices.filter(isFloat).flatMap { i =>
+      Seq(min(cols(i)).as(s"__rmn$i"), max(cols(i)).as(s"__rmx$i"))
     }
-    val one = df.agg(aggs.head, aggs.tail: _*)
+    val counts = df.groupingSets(cols.map(Seq(_)), cols: _*)
+      .agg(count(lit(1)).as("__n"), (grouping_id().as("__gid") +: rawExtremes): _*)
+    val aggs = specs.zipWithIndex.flatMap { case (sp, i) =>
+      val own = when(inSet(i), cols(i))
+      val (mn, mx) =
+        if (isFloat(i)) (when(inSet(i), col(s"__rmn$i")), when(inSet(i), col(s"__rmx$i")))
+        else (own, own)
+      Seq(
+        coalesce(sum(when(inSet(i) && cols(i).isNull, col("__n"))), lit(0L))
+          .as(s"__nn_${sp.name}"),
+        count(own).as(s"__nd_${sp.name}"),
+        sp.fmt(min(mn)).as(s"__mn_${sp.name}"),
+        sp.fmt(max(mx)).as(s"__mx_${sp.name}"))
+    }
+    val one = counts.agg(aggs.head, aggs.tail: _*)
     val rows = specs.map { sp =>
       struct(lit(sp.name).as("col_name"),
         col(s"__nn_${sp.name}").as("n_nulls"),

@@ -29,6 +29,7 @@ object RelQueries {
   private def disc = Exact.dec(col("l_discount"), 4)
   private def tax = Exact.dec(col("l_tax"), 4)
   private def revenue = price * (Exact.one - disc)
+  private def sumRevenue = Exact.sumProduct(price, Exact.one - disc)
 
   /** `families` stacked hashLongSubquery chains over `src`: unsigned
     * hashes xxhash64(lit(i), keyCol) land in columns h0..h(families-1).
@@ -126,12 +127,12 @@ object RelQueries {
         .filter(col("l_shipdate") <= lit("2000-12-31"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
-          sum(qty).cast("double").as("sum_qty"),
-          sum(price).cast("double").as("sum_base_price"),
-          sum(revenue).cast("double").as("sum_disc_price"),
-          sum(revenue * (Exact.one + tax)).cast("double").as("sum_charge"),
-          (sum(qty).cast("double") / count(lit(1))).as("avg_qty"),
-          (sum(price).cast("double") / count(lit(1))).as("avg_price"),
+          Exact.sum(qty).cast("double").as("sum_qty"),
+          Exact.sum(price).cast("double").as("sum_base_price"),
+          sumRevenue.cast("double").as("sum_disc_price"),
+          Exact.sumProduct(revenue, Exact.one + tax).cast("double").as("sum_charge"),
+          (Exact.sum(qty).cast("double") / count(lit(1))).as("avg_qty"),
+          (Exact.sum(price).cast("double") / count(lit(1))).as("avg_price"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
     }, Some(s"""
@@ -155,7 +156,7 @@ object RelQueries {
         .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
         .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
         .groupBy(col("r_name"), col("n_name"))
-        .agg(sum(Exact.dec(col("o_totalprice"))).cast("double").as("revenue"),
+        .agg(Exact.sumD(col("o_totalprice")).as("revenue"),
           count(lit(1)).as("n_orders"))
         .orderBy("r_name", "n_name")
     }, Some("""
@@ -173,7 +174,7 @@ object RelQueries {
       val li = t(s, d, "lineitem"); val o = t(s, d, "orders")
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy(col("o_orderpriority"))
-        .agg(sum(revenue).cast("double").as("revenue"),
+        .agg(sumRevenue.cast("double").as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy("o_orderpriority")
     }, Some(s"""
@@ -247,7 +248,7 @@ object RelQueries {
     ("q08_window_lag_mom", (s: SparkSession, d: String) => {
       val m = t(s, d, "orders")
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-        .agg(sum(Exact.dec(col("o_totalprice"))).cast("double").as("rev"))
+        .agg(Exact.sumD(col("o_totalprice")).as("rev"))
       val w = Window.orderBy(col("month"))
       m.withColumn("prev_rev", lag(col("rev"), 1).over(w))
         .withColumn("delta", col("rev") - col("prev_rev"))
@@ -264,7 +265,7 @@ object RelQueries {
     ("q09_agg_rollup", (s: SparkSession, d: String) => {
       t(s, d, "lineitem")
         .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), sum(qty).cast("double").as("sum_qty"))
+        .agg(count(lit(1)).as("n"), Exact.sum(qty).cast("double").as("sum_qty"))
         .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
     }, Some(s"""
       SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
@@ -277,7 +278,7 @@ object RelQueries {
       t(s, d, "orders")
         .cube(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
-          sum(Exact.dec(col("o_totalprice"))).cast("double").as("sum_price"))
+          Exact.sumD(col("o_totalprice")).as("sum_price"))
         .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
     }, Some("""
       SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
@@ -579,7 +580,7 @@ object RelQueries {
       t(s, d, "lineitem")
         .groupBy(col("l_returnflag"))
         .pivot("l_linestatus", Seq("F", "O"))
-        .agg(sum(qty).cast("double"))
+        .agg(Exact.sum(qty).cast("double"))
         .orderBy("l_returnflag")
     }, Some(s"""
       SELECT l_returnflag,
@@ -594,7 +595,7 @@ object RelQueries {
       c.join(o, c("c_custkey") === o("o_custkey"), "left")
         .groupBy(col("c_custkey"))
         .agg(count(col("o_orderkey")).as("n_big"),
-          coalesce(sum(Exact.dec(col("o_totalprice"))), lit(0))
+          coalesce(Exact.sum(Exact.dec(col("o_totalprice"))), lit(0))
             .cast("double").as("big_total"))
         .orderBy("c_custkey")
     }, Some("""
@@ -674,7 +675,7 @@ object RelQueries {
       c.join(o, c("c_custkey") === o("o_custkey"))
         .join(li, o("o_orderkey") === li("l_orderkey"))
         .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum(revenue).cast("double").as("revenue"))
+        .agg(sumRevenue.cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
     }, Some(s"""
@@ -703,7 +704,7 @@ object RelQueries {
         .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
         .filter(col("r_name") === "EUROPE")
         .groupBy(col("n_name"))
-        .agg(sum(revenue).cast("double").as("revenue"),
+        .agg(sumRevenue.cast("double").as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy("n_name")
     }, Some(s"""
@@ -728,7 +729,7 @@ object RelQueries {
       val ordRev = t(s, d, "lineitem")
         .filter(col("l_returnflag") === "R")
         .groupBy(col("l_orderkey"))
-        .agg(sum(revenue).as("__orev"))
+        .agg(sumRevenue.as("__orev"))
       val custRev = o.join(ordRev, o("o_orderkey") === ordRev("l_orderkey"))
         .groupBy(col("o_custkey"))
         .agg(sum(col("__orev")).as("__crev"))
@@ -767,9 +768,9 @@ object RelQueries {
     ("q56_tpch_q14_shape", (s: SparkSession, d: String) => {
       val li = t(s, d, "lineitem"); val p = t(s, d, "part")
       li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
-        .agg((sum(when(col("p_type") === "PROMO", revenue)
-            .otherwise(lit(0).cast("decimal(3,2)"))).cast("double") /
-          sum(revenue).cast("double")).as("promo_share"))
+        .agg((Exact.sumProduct(when(col("p_type") === "PROMO", price)
+            .otherwise(lit(0).cast("decimal(3,2)")), Exact.one - disc)
+            .cast("double") / sumRevenue.cast("double")).as("promo_share"))
     }, Some(s"""
       SELECT CAST(SUM(CASE WHEN p_type = 'PROMO' THEN $oRev
                            ELSE CAST(0 AS DECIMAL(3,2)) END) AS DOUBLE)
@@ -786,7 +787,7 @@ object RelQueries {
       val o = t(s, d, "orders")
       val big = t(s, d, "lineitem")
         .groupBy(col("l_orderkey"))
-        .agg(sum(qty).as("__sq"))
+        .agg(Exact.sum(qty).as("__sq"))
         .filter(col("__sq") > 150)
       o.join(big, o("o_orderkey") === big("l_orderkey"))
         .select(col("o_orderkey"), col("o_totalprice"),
@@ -859,7 +860,7 @@ object RelQueries {
       Skew.saltedJoin(big, small, "partkey",
           buckets = 8, bigSaltFrom = Seq("l_orderkey", "l_linenumber"))
         .groupBy("p_brand")
-        .agg(count(lit(1)).as("n"), sum(qty).cast("double").as("sum_qty"))
+        .agg(count(lit(1)).as("n"), Exact.sum(qty).cast("double").as("sum_qty"))
         .orderBy("p_brand")
     }, Some(s"""
       SELECT p_brand, COUNT(*) AS n, CAST(SUM($oQty) AS DOUBLE) AS sum_qty
@@ -882,7 +883,7 @@ object RelQueries {
         .join(s.table("graft_b_lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), sum(qty).cast("double").as("sum_qty"))
+        .agg(count(lit(1)).as("n"), Exact.sum(qty).cast("double").as("sum_qty"))
         .orderBy("o_orderpriority")
     }, Some(s"""
       SELECT o_orderpriority, COUNT(*) AS n, CAST(SUM($oQty) AS DOUBLE) AS sum_qty
@@ -946,7 +947,7 @@ object RelQueries {
       graft.ops.Sinks.readDay(s, dir, "2024-01-05")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
-          sum(Exact.dec(col("value"), 10)).cast("double").as("sum_value"))
+          Exact.sumD(col("value"), 10).as("sum_value"))
         .orderBy("event_type")
     }, Some("""
       SELECT event_type, COUNT(*) AS n,
@@ -1039,9 +1040,9 @@ object RelQueries {
       val li = t(s, d, "lineitem")
       val agg = li.groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
-          sum(qty).as("sq"), sum(qty * qty).as("sqq"),
-          sum(price).as("sp"), sum(price * price).as("spp"),
-          sum(qty * price).as("sqp"))
+          Exact.sum(qty).as("sq"), Exact.sumProduct(qty, qty).as("sqq"),
+          Exact.sum(price).as("sp"), Exact.sumProduct(price, price).as("spp"),
+          Exact.sumProduct(qty, price).as("sqp"))
       agg.select(col("l_returnflag"), col("n"),
           sqrt((d2(col("sqq")) - d2(col("sq")) * d2(col("sq")) / col("n")) /
             (col("n") - 1)).as("stddev_qty"),
@@ -1236,10 +1237,11 @@ object RelQueries {
       ORDER BY c_custkey, version""")),
 
     // One-pass column profiler: null/distinct counts and normalized-string
-    // min/max for four differently-typed lineitem columns, from a SINGLE
-    // aggregation over the table (multi-count-distinct plans via Expand).
-    // min/max aggregate on the native type and are rendered after — the
-    // oracle applies the same rendering to the same typed aggregates.
+    // min/max for four differently-typed lineitem columns, from ONE scan
+    // (a grouping-sets count, then one aggregate over the distinct values;
+    // see ops.Profile). min/max aggregate on the native type and are
+    // rendered after — the oracle applies the same rendering to the same
+    // typed aggregates.
     ("q92_profile_columns", (s: SparkSession, d: String) => {
       Profile.profile(t(s, d, "lineitem"), Seq(
           Profile.Spec("l_orderkey"),
@@ -1387,7 +1389,7 @@ object RelQueries {
         .filter(col("supp_nation") =!= col("cust_nation"))
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).as("l_year"))
-        .agg(sum(revenue).cast("double").as("revenue"))
+        .agg(sumRevenue.cast("double").as("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     }, Some(s"""
       SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -1422,7 +1424,7 @@ object RelQueries {
             col("l_quantity").between(10, 30)) ||
           (col("p_brand") === "Brand#3" && col("p_size").between(20, 50) &&
             col("l_quantity").between(20, 50)))
-        .agg(sum(revenue).cast("double").as("revenue"),
+        .agg(sumRevenue.cast("double").as("revenue"),
           count(lit(1)).as("n_items"))
     }, Some(s"""
       SELECT CAST(SUM($oRev) AS DOUBLE) AS revenue, COUNT(*) AS n_items
@@ -1481,7 +1483,7 @@ object RelQueries {
     ("q106_tpch_q17_shape", (s: SparkSession, d: String) => {
       val li = t(s, d, "lineitem")
       val perPart = li.groupBy(col("l_partkey").as("pk"))
-        .agg(sum(qty).as("sq"), count(lit(1)).as("cnt"))
+        .agg(Exact.sum(qty).as("sq"), count(lit(1)).as("cnt"))
       li.join(perPart, col("l_partkey") === col("pk"))
         .filter(qty * lit(5) * col("cnt") < col("sq"))
         .agg((Exact.sumD(col("l_extendedprice"), 12) / 7.0).as("avg_yearly"))
@@ -1638,7 +1640,7 @@ object RelQueries {
         .filter(col("l_shipdate") >= lit("1996-01-01") &&
           col("l_shipdate") < lit("1996-07-01"))
         .groupBy(col("l_suppkey").as("supplier_no"))
-        .agg(sum(revenue).as("total_rev"))
+        .agg(sumRevenue.as("total_rev"))
       val top = rev.agg(max(col("total_rev")).as("mx"))
       rev.join(broadcast(top), col("total_rev") === col("mx"))
         .join(t(s, d, "supplier"), col("supplier_no") === col("s_suppkey"))
@@ -1934,7 +1936,7 @@ object RelQueries {
           col("l_shipdate") < lit("1997-01-01") &&
           col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
           col("l_quantity") < 24)
-        .agg(sum(price * disc).cast("double").as("revenue"))
+        .agg(Exact.sumProduct(price, disc).cast("double").as("revenue"))
     }, Some(s"""
       SELECT CAST(SUM($oPrice * $oDisc) AS DOUBLE) AS revenue
       FROM lineitem
@@ -2000,9 +2002,10 @@ object RelQueries {
         .join(broadcast(custAsia), col("o_custkey") === col("c_custkey"))
         .join(broadcast(supNation), col("l_suppkey") === col("s_suppkey"))
         .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg(sum(when(col("supp_nation") === "NATION_7", revenue))
+        .agg(Exact.sumProduct(when(col("supp_nation") === "NATION_7", price),
+            Exact.one - disc)
             .cast("double").as("mkt_num"),
-          sum(revenue).cast("double").as("mkt_den"))
+          sumRevenue.cast("double").as("mkt_den"))
         .orderBy("o_year")
     }, Some(s"""
       SELECT CAST(year(o_orderdate) AS INT) AS o_year,
@@ -2040,7 +2043,7 @@ object RelQueries {
         .join(broadcast(supNation), col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("supp_nation").as("nation"),
           year(col("o_orderdate")).as("o_year"))
-        .agg(sum(revenue).cast("double").as("sum_profit"))
+        .agg(sumRevenue.cast("double").as("sum_profit"))
         .orderBy(col("nation"), col("o_year").desc)
     }, Some(s"""
       SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
@@ -2476,8 +2479,8 @@ object RelQueries {
       val qualifying = t(s, d, "lineitem")
         .join(broadcast(smallParts), col("l_partkey") === col("p_partkey"))
         .groupBy(col("l_suppkey"), col("l_partkey"))
-        .agg(sum(qty).as("total_qty"),
-          sum(when(col("l_shipdate") >= lit("1995-01-01") &&
+        .agg(Exact.sum(qty).as("total_qty"),
+          Exact.sum(when(col("l_shipdate") >= lit("1995-01-01") &&
             col("l_shipdate") < lit("1996-01-01"), qty)).as("qty_95"))
         .filter(col("total_qty") > coalesce(col("qty_95"),
           lit(0).cast("decimal(10,2)")) * 2)
@@ -2907,7 +2910,7 @@ object RelQueries {
       s.read.parquet(dir).join(dim, "day")
         .groupBy("day")
         .agg(count(lit(1)).as("n"),
-          sum(Exact.dec(col("value"), 10)).cast("double").as("sum_value"))
+          Exact.sumD(col("value"), 10).as("sum_value"))
         .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
           col("n"), col("sum_value"))
         .orderBy("day")
@@ -3134,7 +3137,7 @@ object RelQueries {
       // runs twice (guide §2.4 repeated-subtree discipline).
       val users = t(s, d, "events").groupBy("user_id")
         .agg(count(lit(1)).as("n"),
-          sum(Exact.dec(col("value"), 12)).as("sv"))
+          Exact.sum(Exact.dec(col("value"), 12)).as("sv"))
         .localCheckpoint(true)
       // 8 buckets, not 16: the doomed keys (user_id % 7 = 3) land in
       // every bucket regardless, so a wider modulus only doubles the
@@ -7191,8 +7194,10 @@ object RelQueries {
         sum("cents").cast("long").as("all_cents"))
       byDow.crossJoin(broadcast(tot))
         .select(col("iso_dow"), col("n_days"), col("dow_cents"),
-          expr("dow_cents * all_days * 10000 div (n_days * all_cents)")
-            .as("index_bp"))
+          // DECIMAL(38,0) intermediates, as the oracle's HUGEINT: the
+          // numerator passes 2^63 from about sf0.07.
+          expr("CAST(dow_cents AS DECIMAL(38,0)) * all_days * 10000" +
+            " div (CAST(n_days AS DECIMAL(38,0)) * all_cents)").as("index_bp"))
         .orderBy("iso_dow")
     }, Some("""
       WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
@@ -7816,7 +7821,7 @@ object RelQueries {
       r1.unionByName(r2)
         .groupBy("day", "layout")
         .agg(count(lit(1)).as("n"),
-          sum(Exact.dec(col("value"), 12)).cast("double").as("sv"),
+          Exact.sumD(col("value"), 12).as("sv"),
           countDistinct(col("fn")).as("n_files"))
         .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
           col("layout"), col("n"), col("sv"), col("n_files"))
@@ -8057,10 +8062,8 @@ object RelQueries {
         .select(col("user_id"), (col("tu") - col("prev")).as("g"))
       g.groupBy("user_id").agg(
           count(lit(1)).as("n_gaps"),
-          sum(col("g").cast("decimal(38,0)")).as("sg"),
-          sum((col("g").cast("decimal(19,0)")
-            * col("g").cast("decimal(19,0)")).cast("decimal(38,0)"))
-            .as("sg2"))
+          Exact.sum(col("g")).as("sg"),
+          Exact.sumProduct(col("g"), col("g")).as("sg2"))
         .filter(col("n_gaps") >= 2)
         .select(col("user_id"), col("n_gaps"),
           expr("CAST(sg AS DOUBLE) / n_gaps").as("mean_gap_us"),
@@ -8941,9 +8944,9 @@ object RelQueries {
       val aggs = Seq(count(lit(1)).as("n")) ++
         cents.map(_._2).flatMap { a => Seq(
           sum(col(a)).as(s"s_$a"),
-          sum(expr(s"CAST($a AS DECIMAL(38,0)) * $a")).as(s"ss_$a")) } ++
+          Exact.sumProduct(col(a), col(a)).as(s"ss_$a")) } ++
         cents.map(_._2).combinations(2).map { case Seq(a, b) =>
-          sum(expr(s"CAST($a AS DECIMAL(38,0)) * $b")).as(s"sp_${a}$b") }.toSeq
+          Exact.sumProduct(col(a), col(b)).as(s"sp_${a}$b") }.toSeq
       val one = base.agg(aggs.head, aggs.tail: _*)
       val rows = cents.map(_._2).combinations(2).map { case Seq(a, b) =>
         struct(lit(s"${a}~$b").as("pair"), col("n"),
@@ -9080,7 +9083,7 @@ object RelQueries {
     ("q389_seasonal_decompose", (s: SparkSession, d: String) => {
       val daily = Tables(s, d, "orders")
         .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg((sum(Exact.dec(col("o_totalprice"), 12)) * 100).cast("long")
+        .agg((Exact.sum(Exact.dec(col("o_totalprice"), 12)) * 100).cast("long")
           .as("cents"))
       val w = Window.orderBy("day").rowsBetween(-3, 3)
       val tr = daily
@@ -9240,7 +9243,7 @@ object RelQueries {
       val agg = Tables(s, d, "orders")
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
-          (sum(Exact.dec(col("o_totalprice"), 12)) * 100).cast("long")
+          (Exact.sum(Exact.dec(col("o_totalprice"), 12)) * 100).cast("long")
             .as("cents"))
       val sf = new java.io.File(d).getName
       graft.ops.PlanCache.cached(agg, s"/tmp/graft_plan_cache/$sf",
@@ -9502,14 +9505,14 @@ object RelQueries {
         (Exact.dec(col("p_retailprice"), 12) * 100).cast("long").as("x2"))
       val one = li.join(broadcast(pt), col("l_partkey") === col("p_partkey"))
         .agg(count(lit(1)).as("n"),
-          sum(col("x1").cast("decimal(38,0)")).as("s1"),
-          sum(col("x2").cast("decimal(38,0)")).as("s2"),
-          sum(col("y").cast("decimal(38,0)")).as("sy"),
-          sum(expr("CAST(x1 AS DECIMAL(38,0)) * x1")).as("s11"),
-          sum(expr("CAST(x1 AS DECIMAL(38,0)) * x2")).as("s12"),
-          sum(expr("CAST(x2 AS DECIMAL(38,0)) * x2")).as("s22"),
-          sum(expr("CAST(x1 AS DECIMAL(38,0)) * y")).as("s1y"),
-          sum(expr("CAST(x2 AS DECIMAL(38,0)) * y")).as("s2y"))
+          Exact.sum(col("x1")).as("s1"),
+          Exact.sum(col("x2")).as("s2"),
+          Exact.sum(col("y")).as("sy"),
+          Exact.sumProduct(col("x1"), col("x1")).as("s11"),
+          Exact.sumProduct(col("x1"), col("x2")).as("s12"),
+          Exact.sumProduct(col("x2"), col("x2")).as("s22"),
+          Exact.sumProduct(col("x1"), col("y")).as("s1y"),
+          Exact.sumProduct(col("x2"), col("y")).as("s2y"))
       one.selectExpr("n",
           "CAST(n AS DOUBLE) AS a11", "CAST(s1 AS DOUBLE) AS a12",
           "CAST(s2 AS DOUBLE) AS a13",
@@ -9588,15 +9591,15 @@ object RelQueries {
         .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
         .groupBy("fold")
         .agg(count(lit(1)).as("n"),
-          sum(col("x1").cast("decimal(38,0)")).as("s1"),
-          sum(col("x2").cast("decimal(38,0)")).as("s2"),
-          sum(col("y").cast("decimal(38,0)")).as("sy"),
-          sum(expr("CAST(x1 AS DECIMAL(38,0)) * x1")).as("s11"),
-          sum(expr("CAST(x1 AS DECIMAL(38,0)) * x2")).as("s12"),
-          sum(expr("CAST(x2 AS DECIMAL(38,0)) * x2")).as("s22"),
-          sum(expr("CAST(x1 AS DECIMAL(38,0)) * y")).as("s1y"),
-          sum(expr("CAST(x2 AS DECIMAL(38,0)) * y")).as("s2y"),
-          sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"))
+          Exact.sum(col("x1")).as("s1"),
+          Exact.sum(col("x2")).as("s2"),
+          Exact.sum(col("y")).as("sy"),
+          Exact.sumProduct(col("x1"), col("x1")).as("s11"),
+          Exact.sumProduct(col("x1"), col("x2")).as("s12"),
+          Exact.sumProduct(col("x2"), col("x2")).as("s22"),
+          Exact.sumProduct(col("x1"), col("y")).as("s1y"),
+          Exact.sumProduct(col("x2"), col("y")).as("s2y"),
+          Exact.sumProduct(col("y"), col("y")).as("syy"))
       val tot = perFold.agg(sum("n").as("tn"), sum("s1").as("t1"),
         sum("s2").as("t2"), sum("sy").as("ty"), sum("s11").as("t11"),
         sum("s12").as("t12"), sum("s22").as("t22"), sum("s1y").as("t1y"),

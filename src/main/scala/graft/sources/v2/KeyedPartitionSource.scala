@@ -280,7 +280,7 @@ object Spj {
       .join(supp, col("c_nationkey") === col("s_nationkey"))
       .groupBy(col("c_nationkey").as("nationkey"))
       .agg(count(lit(1)).as("n_pairs"),
-        sum(graft.ops.Exact.dec(col("c_acctbal")) +
+        graft.ops.Exact.sum(graft.ops.Exact.dec(col("c_acctbal")) +
           graft.ops.Exact.dec(col("s_acctbal"))).cast("double").as("bal"))
   }
 }

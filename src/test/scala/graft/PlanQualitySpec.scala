@@ -1093,4 +1093,39 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("Join"), p.take(3000))
     assert(!p.contains("Window"), p.take(3000))
   }
+  test("q92: the profile is ONE scan into a keyed HashAggregate; the only " +
+      "Sort is the final ORDER BY col_name") {
+    val p = plan("q92_profile_columns")
+    assert("FileScan".r.findAllIn(p).length == 1, p.take(3000))
+    // a string min/max next to countDistinct made the keyed aggregate a
+    // SortAggregate over sorted, 4x-expanded rows
+    val keyed = """(\w*Aggregate)\(keys?=\[([^\]]+)\]""".r.findAllMatchIn(p)
+      .map(_.group(1)).toSeq
+    assert(keyed.nonEmpty && keyed.forall(_ == "HashAggregate"), p.take(3000))
+    val sorts = p.linesIterator.filter(l => """\bSort \[""".r.findFirstIn(l).isDefined).toSeq
+    assert(sorts.size == 1 && sorts.head.contains("col_name"), p.take(3000))
+  }
+
+  /** Buffer types of every partial aggregate in the physical plan. */
+  private def partialBuffers(name: String): Seq[org.apache.spark.sql.types.DataType] = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.sparkPlan
+      .collect { case a: BaseAggregateExec => a }
+      .flatMap(_.aggregateExpressions.filter(_.mode == Partial))
+      .flatMap(_.aggregateFunction.aggBufferAttributes.map(_.dataType))
+  }
+
+  test("q01/q71/q387/q401: exact sums keep fixed-width partial buffers — " +
+      "no decimal(38) sum buffer over the scan") {
+    Seq("q01_agg_pricing_summary", "q71_stats_moments", "q387_corr_matrix",
+        "q401_ridge_normal_eq").foreach { q =>
+      val types = partialBuffers(q)
+      assert(types.nonEmpty, q)
+      assert(!types.exists {
+        case d: org.apache.spark.sql.types.DecimalType => d.precision > 18
+        case _ => false
+      }, s"$q: ${types.mkString(", ")}")
+    }
+  }
 }
