@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -54,7 +53,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "10").toDouble
@@ -65,12 +63,7 @@ object Bench {
         case Some(pat) => val r = pat.r; n => r.findFirstIn(n).isDefined
         case None      => _ => true
       }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val names = SparkEntry.queries.keys.filter(nameFilter).toSeq.sorted
     val expected = names.size
@@ -198,19 +191,6 @@ object Bench {
       System.out.flush()
     }
 
-    // The streaming queries land results in `memory`-sink temp views
-    // (fresh UUID name per execution) that otherwise stay registered —
-    // and their rows PINNED on the driver heap, unmanaged by the block
-    // manager — for the session lifetime. Over warmup + 443×reps that
-    // is hundreds of result tables of dead weight, measured as 2-3x
-    // inflation on late-suite queries vs the same query solo. Drop them
-    // once their consumer (count / parquet write) has run.
-    def dropMemSinkViews(): Unit =
-      try spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.contains("_mem_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
-
     // SIGTERM/budget-expiry path: persist + emit whatever completed.
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       if (!emitted) {
@@ -280,51 +260,36 @@ object Bench {
     // Round-13: the representatives run CONCURRENTLY. What warmup buys
     // — JIT of the codegen compiler, parquet readers, the micro-batch
     // engine, state stores — is JVM-wide and order-independent, yet the
-    // serial sweep cost ~40 s per invocation (paid by every driver run
-    // and 4x per matched quad) while the sf0.001 micro-inputs left 32
-    // cores mostly idle. Each warm task runs in its OWN
-    // `spark.newSession()`: several representatives set-then-restore
+    // serial sweep cost ~40 s per invocation while the sf0.001
+    // micro-inputs left the cores mostly idle. Each warm task runs in its
+    // OWN `spark.newSession()`: several representatives set-then-restore
     // session confs (Components' AQE/shuffle-partition toggles, the
-    // streaming state-store provider key), and interleaved restores on
-    // a SHARED session could leave the timed session misconfigured —
-    // cloned sessions share the JVM-wide warmth but isolate conf and
-    // temp views (which die with the warm session instead of pinning
-    // memory-sink rows on the driver heap). SPARK_GRAFT_WARMUP_SERIAL=1
-    // restores the old serial shared-session sweep (kept for matched
-    // A/B validation of this change).
-    if (sys.env.get("SPARK_GRAFT_WARMUP_SERIAL").contains("1")) {
-      warmNames.foreach { n =>
-        if ((System.nanoTime() - warmT0) / 1e9 < warmupBudgetSec) {
-          try SparkEntry.queries(n)(spark, warmDir).count()
+    // streaming state-store provider key), and interleaved restores on a
+    // SHARED session could leave the timed session misconfigured —
+    // cloned sessions share the JVM-wide warmth but isolate conf.
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    warmNames.foreach { n =>
+      pool.submit(new Runnable {
+        def run(): Unit = {
+          val ws = spark.newSession()
+          // Not inherited reliably from builder options; the warm plans
+          // should shuffle like the timed ones so the same generated
+          // classes get compiled.
+          ws.conf.set("spark.sql.shuffle.partitions", parts)
+          try SparkEntry.queries(n)(ws, warmDir).count()
           catch { case _: Throwable => () }
-          dropMemSinkViews()
         }
-      }
-    } else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      warmNames.foreach { n =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            val ws = spark.newSession()
-            // Not inherited reliably from builder options; the warm
-            // plans should shuffle like the timed ones so the same
-            // generated classes get compiled.
-            ws.conf.set("spark.sql.shuffle.partitions", cpus)
-            try SparkEntry.queries(n)(ws, warmDir).count()
-            catch { case _: Throwable => () }
-          }
-        })
-      }
-      pool.shutdown()
-      // The budget bounds the whole pool; on expiry abandon the rest —
-      // warmup is best-effort, and a half-warm JVM beats a blown wall
-      // budget (the timed reps take medians regardless).
-      val waitSec = math.max(1L, warmupBudgetSec.toLong)
-      if (!pool.awaitTermination(waitSec,
-          java.util.concurrent.TimeUnit.SECONDS))
-        pool.shutdownNow()
+      })
     }
-    dropMemSinkViews()
+    pool.shutdown()
+    // The budget bounds the whole pool; on expiry abandon the rest —
+    // warmup is best-effort, and a half-warm JVM beats a blown wall
+    // budget (the timed reps take medians regardless).
+    val waitSec = math.max(1L, warmupBudgetSec.toLong)
+    if (!pool.awaitTermination(waitSec,
+        java.util.concurrent.TimeUnit.SECONDS))
+      pool.shutdownNow()
     warmupSec = (System.nanoTime() - warmT0) / 1e9
     calibOnce() // pay the probe's own codegen once, outside the samples
     sampleCalib()
@@ -359,7 +324,6 @@ object Bench {
         }
         val dt = (System.nanoTime() - t0) / 1e9
         val dc = (osBean.getProcessCpuTime - c0) / 1e9
-        dropMemSinkViews() // outside the timed span: harness hygiene
         (dt, dc, ok)
       }
       val (t1, c1, ok1) = rep()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for the named queries to
   * plans/<tag>/<query>_<suffix>.txt — the committed plan evidence the
   * optimization rounds cite (the judge cannot run Spark; these files are
@@ -9,12 +7,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: sbt "runMain graft.PlanDump q01_agg_pricing_summary ..."
   * Env: SPARK_GRAFT_SF_DIR (data dir, default sf0.1),
-  *      SPARK_GRAFT_CPUS (default 32),
+  *      SPARK_GRAFT_CPUS (default 4),
   *      SPARK_GRAFT_PLAN_DIR (default plans/r13),
   *      SPARK_GRAFT_PLAN_SUFFIX (default "before").
   *
-  * Same session shape as Bench (master local[cpus], shuffle.partitions =
-  * cpus) so the dumped plan is the one the bench actually runs. NOTE:
+  * Same session as Bench ([[GraftSession]]) so the dumped plan is the one
+  * the bench actually runs. NOTE:
   * queries with imperative stages (streaming drains, BSP loops, staged
   * writes) EXECUTE those stages while the DataFrame is being built; the
   * dump is the final returned plan — loop-internal shapes are pinned by
@@ -22,15 +20,9 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r13")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     args.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

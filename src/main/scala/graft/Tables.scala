@@ -63,14 +63,7 @@ object Tables {
   private[graft] def cacheClear(): Unit = relCache.clear()
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Defensive: Bench/Verify set this too, but query results must not
-    // depend on who built the session.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // events.ts is TIMESTAMP(NANOS) parquet, which Spark rejects natively;
-    // read nanos as long and truncate to micros (identical to DuckDB's
-    // ns->us handling). Integer `div` — a double division would lose
-    // precision at 1.7e18 ns epochs.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readConf(spark)
     val path = s"$dir/$name.parquet"
     val f = new java.io.File(path)
     val key = (spark, path, f.length(), f.lastModified(), FileSig.contentTag(f))
@@ -98,15 +91,40 @@ object Tables {
     }
   }
 
+  /** The table as a file STREAM, for queries that drain it through a
+    * real micro-batch execution. The file-stream source needs a
+    * directory-rooted glob, not a bare file path: `basePath` anchors at
+    * the table dir, and the file name with its last letter as a
+    * one-character class globs the one file. The schema is the file's
+    * raw one (the stream source cannot infer it), and `ts` is normalized
+    * exactly as in [[apply]], so the batch and stream views of the same
+    * file agree. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame = {
+    readConf(spark)
+    val raw = spark.read.parquet(s"$dir/$name.parquet").schema
+    normalizeTs(spark.readStream.schema(raw)
+      .option("basePath", dir).parquet(s"$dir/$name.parque[t]"))
+  }
+
+  /** Session conf every table read depends on; set per read so query
+    * results do not depend on who built the session. */
+  private def readConf(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    // events.ts is TIMESTAMP(NANOS) parquet, which Spark rejects natively;
+    // read nanos as long and truncate to micros (identical to DuckDB's
+    // ns->us handling). Integer `div` — a double division would lose
+    // precision at 1.7e18 ns epochs.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  }
+
   /** Normalizes the `ts` column to session-timezone TIMESTAMP regardless
     * of how the parquet writer declared it: TIMESTAMP(NANOS) arrives as
     * a nanos LONG under `nanosAsLong` (truncate to micros — the same
     * ns->us handling DuckDB applies), TIMESTAMP(MICROS) without
     * isAdjustedToUTC arrives as TIMESTAMP_NTZ (reinterpret as UTC — the
     * session timezone, so the instant is unchanged and `unix_micros` /
-    * watermarks / windows resolve). Streaming readers share this so the
-    * batch and stream views of the same file agree. */
-  def normalizeTs(df: DataFrame): DataFrame = {
+    * watermarks / windows resolve). [[stream]] applies it too. */
+  private def normalizeTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     df.schema.fields.find(_.name == "ts") match {

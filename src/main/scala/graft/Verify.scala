@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,14 +10,7 @@ object Verify {
     val nameFilter: String => Boolean =
       if (args.length > 2) { val r = args(2).r; n => r.findFirstIn(n).isDefined }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -45,14 +37,6 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // Drop the streaming queries' memory-sink temp views once their
-        // parquet dump has consumed them: each holds its full result on
-        // the driver heap, unmanaged, for the session lifetime otherwise
-        // (hundreds of dead tables by the end of a 442-query dump).
-        try spark.catalog.listTables().collect()
-          .filter(t => t.isTemporary && t.name.contains("_mem_"))
-          .foreach(t => spark.catalog.dropTempView(t.name))
-        catch { case _: Throwable => () }
     }
     spark.stop()
   }

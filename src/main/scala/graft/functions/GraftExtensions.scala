@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * any runtime registration call:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  * val spark = graft.GraftSession(extensions = true)
   * spark.sql("SELECT graft_cosine_sim(a.embedding, b.embedding) ...")
   * }}}
   *

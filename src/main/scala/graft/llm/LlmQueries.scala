@@ -4898,8 +4898,6 @@ object LlmQueries {
     // transformWithState supports), restored after.
     ("q400_tws_state_ttl", (s: SparkSession, d: String) => {
       import org.apache.spark.sql.streaming.Trigger
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val providerKey = "spark.sql.streaming.stateStore.providerClass"
       val prior = s.conf.getOption(providerKey)
       s.conf.set(providerKey, "org.apache.spark.sql.execution." +
@@ -6922,11 +6920,8 @@ object LlmQueries {
         }
         .option("checkpointLocation", s"$root/ck")
         .trigger(Trigger.AvailableNow())
-      // r13 OPT: input-sized shuffle partitions for the per-batch
-      // band/score joins inside foreachBatch (q135 discipline — there
-      // is no state store here, but each ~500-doc micro-batch otherwise
-      // runs its banded join + keeper aggregation at full session
-      // width).
+      // No state store here: the sized width is for each ~500-doc
+      // micro-batch's banded join + keeper aggregation in foreachBatch.
       graft.streaming.Streams.withSizedState(s, s"$d/documents.parquet") {
         val q = w.start()
         q.awaitTermination()

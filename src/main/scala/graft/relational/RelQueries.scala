@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops._
 import graft.schemas.Contracts
+import graft.streaming.Streams
 
 /** The relational query surface (SURVEY.md §2.5) plus the reference's
   * pipeline operators (§2.3/2.4) demonstrated over the driver testdata,
@@ -22,6 +23,9 @@ import graft.schemas.Contracts
 object RelQueries {
   type Q = (SparkSession, String) => DataFrame
   private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
+  /** State partitions for a stream drained over the events input. */
+  private def sized(s: SparkSession, d: String) =
+    Streams.sizedPartitions(s, s"$d/events.parquet")
 
   // ---- shared exact-decimal fragments (Spark side) ----
   private def qty = Exact.dec(col("l_quantity"), 10)
@@ -1126,15 +1130,7 @@ object RelQueries {
     // — which is exactly what the DuckDB oracle computes — while the
     // watermark/append production shape is covered by StreamsSpec.
     ("q81_stream_windowed_agg", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val path = s"$d/events.parquet"
-      val raw = s.read.parquet(path)
-      // The file-stream source needs a directory-rooted glob, not a bare
-      // file path: anchor basePath at the table dir and glob the one file.
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
-        .transform(Tables.normalizeTs)
+      val stream = Tables.stream(s, d, "events")
         .withWatermark("ts", "1 day")
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         // Exact decimal sum: partial aggregates from any number of tasks
@@ -1144,17 +1140,8 @@ object RelQueries {
         .agg(count(lit(1)).as("n"), Exact.sumD(col("value")).as("sum_value"))
         .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("n"), col("sum_value"))
-      val sink = s"q81_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      // r13 OPT: size the state partition count to the stream's input
-      // (the q135 withSizedState discipline, guide §2 — a tiny input
-      // otherwise pays a full 32-partition state-store wave per
-      // micro-batch). Results are partition-count-independent.
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = stream.writeStream.format("memory")
-          .queryName(sink).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("day", "event_type")
+      Streams.drain(stream, "complete", sized(s, d))
+        .orderBy("day", "event_type")
     }, Some("""
       SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
         COUNT(*) AS n,
@@ -1167,14 +1154,10 @@ object RelQueries {
     // columns only — JSON round-trips them exactly; the oracle aggregates
     // the original parquet, so the comparison proves sink+source fidelity.
     ("q84_json_sink_roundtrip", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val base = s"/tmp/graft_json/${new java.io.File(d).getName}"
       val (outDir, ckDir) = (s"$base/out", s"$base/ck")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
+      val stream = Tables.stream(s, d, "events")
         .select("event_id", "user_id", "event_type")
       val q = stream.writeStream.format("json")
         .option("path", outDir).option("checkpointLocation", ckDir)
@@ -1347,21 +1330,11 @@ object RelQueries {
     // what the oracle computes); keeper semantics for payload columns are
     // covered by q19/q20 and StreamsSpec.
     ("q96_stream_global_dedup", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
+      val stream = Tables.stream(s, d, "events")
         .select("user_id", "event_type")
         .dropDuplicates("user_id", "event_type")
-      val sink = s"q96_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      // r13 OPT: input-sized state partitions (q135 discipline).
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = stream.writeStream.format("memory")
-          .queryName(sink).outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("user_id", "event_type")
+      Streams.drain(stream, "append", sized(s, d))
+        .orderBy("user_id", "event_type")
     }, Some("""
       SELECT DISTINCT user_id, event_type FROM events
       ORDER BY user_id, event_type""")),
@@ -1726,28 +1699,15 @@ object RelQueries {
     // last+gap opens a NEW session) is precisely q24's >=-gap
     // gaps-and-islands definition, which is what the oracle computes.
     ("q118_stream_session_window", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
-        .transform(Tables.normalizeTs)
+      val stream = Tables.stream(s, d, "events")
         .groupBy(session_window(col("ts"), "1 hour"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"),
           col("session_window.start").as("session_start"),
           col("session_window.end").as("session_end"),
           col("n_events"))
-      val sink = s"q118_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      // r13 OPT: input-sized state partitions (q135 discipline) — the
-      // session-window operator otherwise commits a full default-width
-      // state wave per micro-batch.
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = stream.writeStream.format("memory")
-          .queryName(sink).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("user_id", "session_start")
+      Streams.drain(stream, "complete", sized(s, d))
+        .orderBy("user_id", "session_start")
     }, Some("""
       WITH x AS (SELECT user_id, ts,
           CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
@@ -1773,8 +1733,6 @@ object RelQueries {
     // provider conf is restored afterwards so the session's other
     // streaming queries keep their default store.
     ("q129_tws_map_counts", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val providerKey = "spark.sql.streaming.stateStore.providerClass"
       val prior = s.conf.getOption(providerKey)
       s.conf.set(providerKey,
@@ -1788,22 +1746,11 @@ object RelQueries {
       // changelog path just adds a delta-file write + async maintenance.
       // The lever only pays when store count x batch count is large.
       try {
-        val raw = s.read.parquet(s"$d/events.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("basePath", d).parquet(s"$d/events.parque[t]")
+        val stream = Tables.stream(s, d, "events")
           .select(col("user_id"), col("event_type"))
-        val out = graft.streaming.Streams.userTypeCountsTws(s, stream)
-        val sink = s"q129_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        // r13 OPT: input-sized state partitions (q135 discipline) —
-        // with RocksDB each state partition is its own store instance,
-        // so a full-width wave pays 32 RocksDB open/commit cycles per
-        // micro-batch for a metadata-scale keyspace.
-        graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-          val q = out.writeStream.format("memory")
-            .queryName(sink).outputMode("update").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.table(sink).groupBy("user_id", "event_type")
+        val out = Streams.userTypeCountsTws(s, stream)
+        Streams.drain(out, "update", sized(s, d))
+          .groupBy("user_id", "event_type")
           .agg(max(col("n")).as("n"))
           .orderBy("user_id", "event_type")
       } finally {
@@ -1824,20 +1771,10 @@ object RelQueries {
     // join, which is what the oracle computes; watermarks bound STATE,
     // they drop no on-time data.
     ("q135_stream_stream_join", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
-        .transform(Tables.normalizeTs)
-      val joined = graft.streaming.Streams.purchaseViewJoin(stream, "24 hours")
-      val sink = s"q135_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = joined.writeStream.format("memory")
-          .queryName(sink).outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).select("user_id", "p_id", "v_id")
+      val joined =
+        Streams.purchaseViewJoin(Tables.stream(s, d, "events"), "24 hours")
+      Streams.drain(joined, "append", sized(s, d))
+        .select("user_id", "p_id", "v_id")
         .orderBy("user_id", "p_id", "v_id")
     }, Some("""
       SELECT p.user_id, p.event_id AS p_id, v.event_id AS v_id
@@ -2363,30 +2300,15 @@ object RelQueries {
     // then aggregated per (segment, event_type) in complete mode. The
     // oracle computes the same enrichment + aggregate in batch.
     ("q152_stream_static_join", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
-      val dim = s.read.parquet(s"$d/customer.parquet")
+      val stream = Tables.stream(s, d, "events")
+      val dim = t(s, d, "customer")
         .select(col("c_custkey").as("user_id"),
           col("c_mktsegment").as("segment"))
-      val enriched = graft.streaming.Streams.enrichWithDim(
-        stream, dim, Seq("user_id"))
+      val enriched = Streams.enrichWithDim(stream, dim, Seq("user_id"))
       val aggd = enriched.groupBy("segment", "event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(16,2)")).as("sum_v"))
-      val sink = s"q152_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      // r14: input-sized state partitions (the q135 withSizedState
-      // discipline, guide §2) — this was the one STATEFUL stream still
-      // committing a full session-width state-store wave per micro-batch
-      // for a segment×type-sized keyspace.
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = aggd.writeStream.format("memory")
-          .queryName(sink).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      Streams.drain(aggd, "complete", sized(s, d))
         .select(col("segment"), col("event_type"), col("n"),
           col("sum_v").cast("double").as("sum_v"))
         .orderBy("segment", "event_type")
@@ -2927,25 +2849,14 @@ object RelQueries {
     // replays the overlap: each row contributes to the windows starting
     // at trunc(ts) and trunc(ts) - 1 day.
     ("q178_stream_sliding_window", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
-        .transform(Tables.normalizeTs)
+      val stream = Tables.stream(s, d, "events")
         .withWatermark("ts", "1 day")
         .groupBy(window(col("ts"), "2 days", "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n"), Exact.sumD(col("value")).as("sum_value"))
         .select(date_format(col("window.start"), "yyyy-MM-dd").as("w_start"),
           col("event_type"), col("n"), col("sum_value"))
-      val sink = s"q178_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      // r13 OPT: input-sized state partitions (q135 discipline).
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = stream.writeStream.format("memory")
-          .queryName(sink).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("w_start", "event_type")
+      Streams.drain(stream, "complete", sized(s, d))
+        .orderBy("w_start", "event_type")
     }, Some("""
       WITH x AS (SELECT event_type, value,
           date_trunc('day', ts) - k * INTERVAL 1 DAY AS w_start
@@ -3028,9 +2939,7 @@ object RelQueries {
     // user that can never match) force every real window closed before
     // the stream drains. The batch oracle is the plain left join.
     ("q183_stream_outer_join", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = Tables.normalizeTs(s.read.parquet(s"$d/events.parquet"))
+      val raw = t(s, d, "events")
       val inDir = s"/tmp/graft_q183/${new java.io.File(d).getName}/in"
       val maxTs = raw.agg(max(unix_micros(col("ts")))).head().getLong(0)
       val far = maxTs + 30L * 24 * 3600 * 1000000L
@@ -3043,14 +2952,9 @@ object RelQueries {
       raw.unionByName(sentinels).coalesce(2)
         .write.mode("overwrite").parquet(inDir)
       val stream = s.readStream.schema(raw.schema).parquet(inDir)
-      val joined = graft.streaming.Streams.purchaseViewLeftJoin(stream)
-      val sink = s"q183_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = joined.writeStream.format("memory")
-          .queryName(sink).outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).filter(col("user_id") >= 0)
+      val joined = Streams.purchaseViewLeftJoin(stream)
+      Streams.drain(joined, "append", sized(s, d))
+        .filter(col("user_id") >= 0)
         .select("user_id", "p_id", "v_id")
         .orderBy("user_id", "p_id", "v_id")
     }, Some("""
@@ -3255,26 +3159,14 @@ object RelQueries {
     // is no longer write-only. The state read is partition-parallel
     // (one task per state partition) — no driver-side decode.
     ("q193_statestore_dedup_read", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ck = s"/tmp/graft_ss/${new java.io.File(d).getName}/dedup_ck"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
+      val stream = Tables.stream(s, d, "events")
         .select("user_id", "event_type")
         .dropDuplicates("user_id", "event_type")
-      val sink = s"q193_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      // r13 OPT: input-sized state partitions (q135 discipline); the
-      // statestore read-back discovers the count from the checkpoint,
-      // so the audit scan also drops from 32 near-empty tasks to the
-      // sized count.
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = stream.writeStream.format("memory")
-          .queryName(sink).outputMode("append")
-          .option("checkpointLocation", ck).start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      // The statestore read-back discovers the state partition count from
+      // the checkpoint, so the audit scan runs at the sized count too.
+      Streams.drain(stream, "append", sized(s, d), Some(ck))
       s.read.format("statestore").load(ck)
         .select(col("key.user_id").as("user_id"),
           col("key.event_type").as("event_type"))
@@ -3290,22 +3182,10 @@ object RelQueries {
     // equal the from-scratch computation?) as a single oracle-gated
     // relation, keys and values both decoded.
     ("q194_statestore_agg_read", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ck = s"/tmp/graft_ss/${new java.io.File(d).getName}/agg_ck"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
-        .groupBy("user_id").count()
-      val sink = s"q194_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      // r13 OPT: input-sized state partitions (q135 discipline, see q193).
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = stream.writeStream.format("memory")
-          .queryName(sink).outputMode("update")
-          .option("checkpointLocation", ck).start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      val stream = Tables.stream(s, d, "events").groupBy("user_id").count()
+      Streams.drain(stream, "update", sized(s, d), Some(ck))
       s.read.format("statestore").load(ck)
         .select(col("key.user_id").as("user_id"),
           col("value.count").as("n"))
@@ -3464,11 +3344,9 @@ object RelQueries {
               VALUES (s.user_id, s.n, s.cents)""")
           (): Unit
         }
-      // r13 OPT: input-sized shuffle partitions for the per-batch
-      // aggregate + MERGE (q135 discipline — no state store here, but
-      // each half-table micro-batch otherwise runs its groupBy and the
-      // row-level MERGE join at full session width).
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
+      // No state store here: the sized width is for each half-table
+      // micro-batch's groupBy and row-level MERGE join.
+      Streams.withSizedState(s, s"$d/events.parquet") {
         val qq = q.start()
         try qq.processAllAvailable() finally qq.stop()
       }
@@ -3679,7 +3557,6 @@ object RelQueries {
     // a staged batch share one event time, so the watermark ladder — and
     // therefore the emitted multiset — is deterministic.
     ("q210_stream_dedup_within_watermark", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
       val sf = new java.io.File(d).getName
       val base = s"/tmp/graft_wmdedup/$sf"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
@@ -3702,13 +3579,8 @@ object RelQueries {
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select("user_id", "event_type")
-      val sink = s"q210_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = stream.writeStream.format("memory")
-          .queryName(sink).outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).groupBy("user_id", "event_type")
+      Streams.drain(stream, "append", sized(s, d))
+        .groupBy("user_id", "event_type")
         .agg(count(lit(1)).as("n_emitted"))
         .orderBy("user_id", "event_type")
     }, Some("""
@@ -3915,20 +3787,10 @@ object RelQueries {
     // stream-stream family beside inner (q135) and left-outer (q183);
     // real micro-batch execution through the oracle's EXISTS replay.
     ("q216_stream_semi_join", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
-        .transform(Tables.normalizeTs)
-      val joined = graft.streaming.Streams.purchaseViewSemiJoin(stream, "24 hours")
-      val sink = s"q216_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = joined.writeStream.format("memory")
-          .queryName(sink).outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).select("user_id", "p_id").orderBy("user_id", "p_id")
+      val joined =
+        Streams.purchaseViewSemiJoin(Tables.stream(s, d, "events"), "24 hours")
+      Streams.drain(joined, "append", sized(s, d))
+        .select("user_id", "p_id").orderBy("user_id", "p_id")
     }, Some("""
       SELECT p.user_id, p.event_id AS p_id
       FROM events p
@@ -4246,9 +4108,7 @@ object RelQueries {
     // never match) forces every real window closed before the stream
     // drains; the batch oracle is the plain FULL JOIN.
     ("q233_stream_full_outer_join", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = Tables.normalizeTs(s.read.parquet(s"$d/events.parquet"))
+      val raw = t(s, d, "events")
       val inDir = s"/tmp/graft_q233/${new java.io.File(d).getName}/in"
       val maxTs = raw.agg(max(unix_micros(col("ts")))).head().getLong(0)
       val far = maxTs + 30L * 24 * 3600 * 1000000L
@@ -4261,14 +4121,9 @@ object RelQueries {
       raw.unionByName(sentinels).coalesce(2)
         .write.mode("overwrite").parquet(inDir)
       val stream = s.readStream.schema(raw.schema).parquet(inDir)
-      val joined = graft.streaming.Streams.purchaseViewFullJoin(stream)
-      val sink = s"q233_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = joined.writeStream.format("memory")
-          .queryName(sink).outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).filter(col("user_id") >= 0)
+      val joined = Streams.purchaseViewFullJoin(stream)
+      Streams.drain(joined, "append", sized(s, d))
+        .filter(col("user_id") >= 0)
         .select("user_id", "p_id", "v_id")
         .orderBy("user_id", "p_id", "v_id")
     }, Some("""
@@ -8584,13 +8439,7 @@ object RelQueries {
     // replays the append-mode close rules: daily windows emit when
     // d_end ≤ wm, weekly windows when w_end ≤ wm, wm = max(ts) − 1 day.
     ("q377_chained_stateful", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
-        .transform(Tables.normalizeTs)
-      val daily = stream.withWatermark("ts", "1 day")
+      val daily = Tables.stream(s, d, "events").withWatermark("ts", "1 day")
         .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"))
       val weekly = daily
@@ -8599,14 +8448,8 @@ object RelQueries {
           count(lit(1)).as("n_days"))
         .select(date_format(col("ww.start"), "yyyy-MM-dd").as("week_start"),
           col("event_type"), col("total"), col("max_daily"), col("n_days"))
-      val sink =
-        s"q377_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = weekly.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("week_start", "event_type")
+      Streams.drain(weekly, "append", sized(s, d))
+        .orderBy("week_start", "event_type")
     }, Some("""
       WITH wm AS (SELECT MAX(ts) - INTERVAL 1 DAY AS wm FROM events),
       daily AS (SELECT date_trunc('day', ts) AS d0, event_type,
@@ -9323,12 +9166,7 @@ object RelQueries {
     // integer rate. Real micro-batch execution through the memory
     // sink.
     ("q394_stream_pit_enrich", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val stream = s.readStream.schema(raw.schema)
-        .option("basePath", d).parquet(s"$d/events.parque[t]")
-        .transform(Tables.normalizeTs)
+      val stream = Tables.stream(s, d, "events")
       val cut = "2024-01-15 00:00:00"
       val dim = Tables(s, d, "events").select("event_type").distinct()
         .select(col("event_type").as("ty"), explode(array(
@@ -9348,15 +9186,8 @@ object RelQueries {
         .agg(count(lit(1)).as("n"),
           sum((Exact.dec(col("value"), 16) * 100).cast("long")
             * col("rate")).as("amount_cents"))
-      val sink = s"q394_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      // r13 OPT: input-sized state partitions (q135 discipline) for the
-      // streaming aggregation above the broadcast PIT join.
-      graft.streaming.Streams.withSizedState(s, s"$d/events.parquet") {
-        val q = joined.writeStream.format("memory")
-          .queryName(sink).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).select("event_type", "rate", "n", "amount_cents")
+      Streams.drain(joined, "complete", sized(s, d))
+        .select("event_type", "rate", "n", "amount_cents")
         .orderBy("event_type", "rate")
     }, Some("""
       WITH types AS (SELECT DISTINCT event_type FROM events),
@@ -9722,8 +9553,6 @@ object RelQueries {
     // lost or double-counted in migration), and the query itself
     // requires the rebalanced store really is 4-wide before emitting.
     ("q403_state_repartition", (s: SparkSession, d: String) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val root = s"/tmp/graft_q403/${new java.io.File(d).getName}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val ev = t(s, d, "events").select(col("user_id"),
@@ -9732,28 +9561,18 @@ object RelQueries {
         .write.parquet(s"$root/h0")
       ev.filter(col("half") === 1).select("user_id").coalesce(1)
         .write.parquet(s"$root/h1")
-      val key = "spark.sql.shuffle.partitions"
-      val prior = s.conf.get(key)
-      def drain(parts: Int, ck: String)(out: DataFrame): Unit = {
-        s.conf.set(key, parts.toString)
-        try {
-          val sink = s"q403_mem_${java.util.UUID.randomUUID()
-            .toString.replace("-", "")}"
-          val q = out.writeStream.format("memory").queryName(sink)
-            .outputMode("update").option("checkpointLocation", ck).start()
-          try q.processAllAvailable() finally q.stop()
-        } finally s.conf.set(key, prior)
-      }
-      drain(2, s"$root/ck1")(
+      Streams.drain(
         s.readStream.schema("user_id LONG").parquet(s"$root/h0")
-          .groupBy("user_id").count())
+          .groupBy("user_id").count(),
+        "update", 2, Some(s"$root/ck1"))
       val migrated = s.read.format("statestore").load(s"$root/ck1")
         .select(col("key.user_id").as("user_id"),
           col("value.count").as("n"))
-      drain(4, s"$root/ck2")(
-        graft.streaming.Streams.userCountsFmgsInitial(s,
+      Streams.drain(
+        Streams.userCountsFmgsInitial(s,
           s.readStream.schema("user_id LONG").parquet(s"$root/h1"),
-          migrated))
+          migrated),
+        "update", 4, Some(s"$root/ck2"))
       val st2 = s.read.format("statestore").load(s"$root/ck2")
       val nParts = new java.io.File(s"$root/ck2/state/0")
         .listFiles().count(f => f.isDirectory && f.getName.forall(_.isDigit))

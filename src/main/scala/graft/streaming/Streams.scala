@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming pipelines — the continuous shapes of the reference
@@ -18,28 +18,63 @@ object Streams {
   private val inputCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Run a fresh-checkpoint micro-batch execution with
-    * `spark.sql.shuffle.partitions` — which fixes the STATE partition
-    * count at the first checkpoint — sized to the stream's actual input
-    * volume (~50k rows per state partition, capped at the session
-    * default). A production deployment picks its state partition count
-    * deliberately and large, once, at checkpoint creation; these
-    * executions create a fresh checkpoint per run, so sizing to the
-    * input is the same decision made honestly at bench scale — a tiny
-    * input otherwise pays a full-width state-store wave (32 delta-file
-    * dirs per stateful operator) every micro-batch, which dominates the
-    * run (q135 at sf0.1: 5.9s → 2.2s). Restores the session value
-    * before returning, so the (batch) result consumers keep the
-    * corpus-sized setting. */
-  def withSizedState[T](spark: org.apache.spark.sql.SparkSession,
-      inputParquet: String)(f: => T): T = {
+  /** The state partition count for a fresh-checkpoint micro-batch
+    * execution over `inputParquet`: ~50k input rows per state partition,
+    * capped at the session's `spark.sql.shuffle.partitions`. A production
+    * deployment picks its state partition count deliberately and large,
+    * once, at checkpoint creation; these executions create a fresh
+    * checkpoint per run, so sizing to the input is the same decision made
+    * honestly at bench scale — a tiny input otherwise pays a full-width
+    * state-store wave (one delta-file dir per partition per stateful
+    * operator, one RocksDB instance each under transformWithState) every
+    * micro-batch, which dominates the run (q135 at sf0.1: 5.9s → 2.2s).
+    * Results are partition-count-independent. The input's row count is
+    * memoized per path. */
+  def sizedPartitions(spark: SparkSession, inputParquet: String): Int = {
     val rows: Long = inputCounts.computeIfAbsent(inputParquet,
       p => spark.read.parquet(p).count())
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    val p = math.max(1L, math.min(old.toLong, rows / 50000L + 1)).toString
-    spark.conf.set(key, p)
-    try f finally spark.conf.set(key, old)
+    val cap = spark.conf.get(ShufflePartitions).toLong
+    math.max(1L, math.min(cap, rows / 50000L + 1)).toInt
+  }
+
+  /** Runs `f` with `spark.sql.shuffle.partitions` — which fixes the STATE
+    * partition count at a fresh checkpoint, and the width of per-batch
+    * shuffles — set to [[sizedPartitions]] for `inputParquet`. Restores
+    * the session value before returning, so the (batch) result consumers
+    * keep the corpus-sized setting. */
+  def withSizedState[T](spark: SparkSession, inputParquet: String)(
+      f: => T): T =
+    withPartitions(spark, sizedPartitions(spark, inputParquet))(f)
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  private def withPartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
+    val old = spark.conf.get(ShufflePartitions)
+    spark.conf.set(ShufflePartitions, n.toString)
+    try f finally spark.conf.set(ShufflePartitions, old)
+  }
+
+  /** Drains the streaming frame `out` to the end of its available input
+    * through a memory sink in output `mode`, with `statePartitions` state
+    * partitions ([[sizedPartitions]] for an input-sized store) and an
+    * optional explicit checkpoint, and returns the sink's rows. On every
+    * path the query is stopped and the sink's temp view dropped, so a
+    * failing stream rethrows with nothing left running or registered. The
+    * returned frame's analyzed plan holds the sink itself, so its rows
+    * live on the driver heap only as long as the caller keeps the frame,
+    * not for the session. */
+  def drain(out: DataFrame, mode: String, statePartitions: Int,
+      checkpoint: Option[String] = None): DataFrame = {
+    val spark = out.sparkSession
+    val name = s"drain_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    try {
+      withPartitions(spark, statePartitions) {
+        val w = out.writeStream.format("memory").queryName(name).outputMode(mode)
+        val q = checkpoint.fold(w)(w.option("checkpointLocation", _)).start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** E1 analogue: per-day dedup (D1) then daily counts per type. The day

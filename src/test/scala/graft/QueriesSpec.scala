@@ -27,6 +27,11 @@ class QueriesSpec extends SparkSpec {
     test(s"$name executes at sf0.001") {
       val n = fn(spark, sfDir).count()
       assert(n >= 0)
+      // A query leaves nothing running and no memory-sink view behind.
+      assert(spark.streams.active.isEmpty)
+      val memViews = spark.catalog.listTables().collect()
+        .filter(t => t.isTemporary && t.name.contains("_mem_")).map(_.name)
+      assert(memViews.isEmpty, s"memory-sink views left: ${memViews.toSeq}")
     }
   }
 }

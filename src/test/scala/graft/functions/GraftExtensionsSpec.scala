@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The extensions path must hand SQL users the native functions with no
-  * runtime registration (spark.sql.extensions-compatible). Uses its own
-  * session builder — that is the thing under test. */
+  * runtime registration (spark.sql.extensions-compatible). Builds its own
+  * session with the extensions injected — that is the thing under test. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("withExtensions exposes graft functions to pure SQL") {
@@ -15,13 +15,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val prior = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession(cpus = 2, extensions = true)
     try {
       val sim = spark.sql(
         """SELECT graft_cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),

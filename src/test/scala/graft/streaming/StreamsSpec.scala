@@ -517,4 +517,77 @@ class StreamsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(state == Map(1L -> 7L, 2L -> 1L, 7L -> 9L))
   }
+
+  private def tempViews: Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  /** Two files, one per micro-batch under maxFilesPerTrigger=1. */
+  private def drainSource(): (DataFrame, DataFrame) = {
+    val srcDir = tmp("src")
+    eventsDf(Seq(
+      ("2024-01-01 10:00:00", 1L, "click"),
+      ("2024-01-01 11:00:00", 1L, "click"),
+      ("2024-01-01 12:00:00", 2L, "view")
+    )).coalesce(1).write.mode("append").parquet(srcDir)
+    eventsDf(Seq(
+      ("2024-01-02 10:00:00", 1L, "click"),
+      ("2024-01-02 11:00:00", 3L, "view"),
+      ("2024-01-02 12:00:00", 2L, "buy")
+    )).coalesce(1).write.mode("append").parquet(srcDir)
+    (spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(srcDir), spark.read.schema(schema).parquet(srcDir))
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("drain: complete, append and update modes equal the batch result") {
+    val (stream, batch) = drainSource()
+    val complete = Streams.drain(
+      stream.groupBy("event_type").count(), "complete", 2)
+    assert(rows(complete) == rows(batch.groupBy("event_type").count()))
+    val append = Streams.drain(
+      stream.dropDuplicates("user_id", "event_type"), "append", 2)
+      .select("user_id", "event_type")
+    assert(rows(append) ==
+      rows(batch.select("user_id", "event_type").distinct()))
+    // update mode re-emits a key per batch that touches it; the last
+    // (largest) running count is the final one
+    val update = Streams.drain(
+      stream.groupBy("user_id").count(), "update", 2, Some(tmp("ck")))
+      .groupBy("user_id").agg(max("count").as("count"))
+    assert(rows(update) == rows(batch.groupBy("user_id").count()))
+  }
+
+  test("drain: the result is stable across actions, nothing stays " +
+      "registered, shuffle partitions are restored") {
+    val (stream, _) = drainSource()
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    val before = tempViews
+    val out = Streams.drain(stream.groupBy("user_id").count(), "complete", 3)
+    assert(spark.conf.get(key) == prior)
+    assert(tempViews == before)
+    assert(spark.streams.active.isEmpty)
+    val first = rows(out)
+    assert(first.nonEmpty)
+    assert(rows(out) == first)
+    assert(out.count() == first.size)
+  }
+
+  test("drain: a failing stream rethrows and leaves no query or view") {
+    val (stream, _) = drainSource()
+    val boom = udf((u: Long) =>
+      if (u == 3L) throw new IllegalStateException("drain-boom") else u)
+    val before = tempViews
+    val e = intercept[Exception] {
+      Streams.drain(stream.select(boom(col("user_id")).as("u")), "append", 2)
+    }
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(e).exists(t => String.valueOf(t.getMessage)
+      .contains("drain-boom")), e)
+    assert(spark.streams.active.isEmpty)
+    assert(tempViews == before)
+  }
 }
