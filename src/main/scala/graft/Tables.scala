@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver testdata tables (TESTDATA.md).
   *
@@ -19,8 +20,8 @@ object Tables {
     * metastore-backed table resolves from cached metadata. Queries here
     * read 1-5 tables each, so the per-resolution cost is a fixed tax on
     * every invocation that a catalog would not charge. The cached
-    * object is just the analyzed (immutable) logical plan — no data is
-    * pinned.
+    * object is just the analyzed (immutable) logical plan and the raw
+    * file schema the stream view reads — no data is pinned.
     *
     * Keyed by SESSION IDENTITY (plans are session-bound; SparkSession
     * does not override equals, so tuple equality IS reference equality
@@ -49,7 +50,11 @@ object Tables {
     * rather than tracked with per-session bounds. */
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Long, Long, String), DataFrame]()
+      (SparkSession, String, Long, Long, String), Resolved]()
+
+  /** A cached resolution: the file's raw schema (what [[stream]] needs)
+    * and the `ts`-normalized relation (what [[apply]] returns). */
+  private case class Resolved(raw: StructType, df: DataFrame)
 
   /** Eviction bound; package-visible so the spec can exercise the
     * eviction path without resolving hundreds of relations. Volatile:
@@ -62,7 +67,10 @@ object Tables {
     * size, and suites share this JVM-wide map. */
   private[graft] def cacheClear(): Unit = relCache.clear()
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    resolve(spark, dir, name).df
+
+  private def resolve(spark: SparkSession, dir: String, name: String): Resolved = {
     readConf(spark)
     val path = s"$dir/$name.parquet"
     val f = new java.io.File(path)
@@ -85,9 +93,10 @@ object Tables {
       // repartition of such scans here doubled task CPU over the
       // batch-analytics workload (local[4], sf0.1), and only the column
       // profile (q92) got faster; its cost is fixed in Profile.profile.
-      val df = normalizeTs(spark.read.parquet(path))
-      relCache.put(key, df)
-      df
+      val raw = spark.read.parquet(path)
+      val r = Resolved(raw.schema, normalizeTs(raw))
+      relCache.put(key, r)
+      r
     }
   }
 
@@ -96,12 +105,11 @@ object Tables {
     * directory-rooted glob, not a bare file path: `basePath` anchors at
     * the table dir, and the file name with its last letter as a
     * one-character class globs the one file. The schema is the file's
-    * raw one (the stream source cannot infer it), and `ts` is normalized
-    * exactly as in [[apply]], so the batch and stream views of the same
-    * file agree. */
+    * raw one (the stream source cannot infer it), served from the same
+    * cache entry as [[apply]], and `ts` is normalized exactly as there, so
+    * the batch and stream views of the same file agree. */
   def stream(spark: SparkSession, dir: String, name: String): DataFrame = {
-    readConf(spark)
-    val raw = spark.read.parquet(s"$dir/$name.parquet").schema
+    val raw = resolve(spark, dir, name).raw
     normalizeTs(spark.readStream.schema(raw)
       .option("basePath", dir).parquet(s"$dir/$name.parque[t]"))
   }

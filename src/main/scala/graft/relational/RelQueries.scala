@@ -3166,7 +3166,7 @@ object RelQueries {
         .dropDuplicates("user_id", "event_type")
       // The statestore read-back discovers the state partition count from
       // the checkpoint, so the audit scan runs at the sized count too.
-      Streams.drain(stream, "append", sized(s, d), Some(ck))
+      Streams.drainCheckpoint(stream, "append", sized(s, d), ck)
       s.read.format("statestore").load(ck)
         .select(col("key.user_id").as("user_id"),
           col("key.event_type").as("event_type"))
@@ -3185,7 +3185,7 @@ object RelQueries {
       val ck = s"/tmp/graft_ss/${new java.io.File(d).getName}/agg_ck"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
       val stream = Tables.stream(s, d, "events").groupBy("user_id").count()
-      Streams.drain(stream, "update", sized(s, d), Some(ck))
+      Streams.drainCheckpoint(stream, "update", sized(s, d), ck)
       s.read.format("statestore").load(ck)
         .select(col("key.user_id").as("user_id"),
           col("value.count").as("n"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming pipelines — the continuous shapes of the reference
@@ -68,14 +69,26 @@ object Streams {
     val spark = out.sparkSession
     val name = s"drain_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     try {
-      withPartitions(spark, statePartitions) {
-        val w = out.writeStream.format("memory").queryName(name).outputMode(mode)
-        val q = checkpoint.fold(w)(w.option("checkpointLocation", _)).start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      run(out, mode, statePartitions, checkpoint)(_.format("memory").queryName(name))
       spark.table(name)
     } finally spark.catalog.dropTempView(name)
   }
+
+  /** [[drain]] for the checkpoint alone: the same execution into the
+    * streaming `noop` sink, which keeps no row, for a caller that reads
+    * back the state store in `checkpoint` rather than the output. */
+  def drainCheckpoint(out: DataFrame, mode: String, statePartitions: Int,
+      checkpoint: String): Unit =
+    run(out, mode, statePartitions, Some(checkpoint))(_.format("noop"))
+
+  private def run(out: DataFrame, mode: String, statePartitions: Int,
+      checkpoint: Option[String])(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    withPartitions(out.sparkSession, statePartitions) {
+      val w = sink(out.writeStream.outputMode(mode))
+      val q = checkpoint.fold(w)(w.option("checkpointLocation", _)).start()
+      try q.processAllAvailable() finally q.stop()
+    }
 
   /** E1 analogue: per-day dedup (D1) then daily counts per type. The day
     * bucket joins the dedup key so duplicates collapse within a day but

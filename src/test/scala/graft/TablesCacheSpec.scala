@@ -92,4 +92,39 @@ class TablesCacheSpec extends SparkSpec {
         "the caller's cached relations must survive the eviction sweep")
     } finally Tables.cacheBound = oldBound
   }
+
+  test("the stream view takes its raw schema from the batch view's cache entry") {
+    // Parquet schema inference runs a job; a cached schema runs none.
+    // Listener events arrive in order, so once a marker job's end is seen,
+    // every job started before it has been counted.
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val marker = "tables-cache-marker"
+    val l = new SparkListener {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      @volatile var markerJob = -1
+      @volatile var markerDone = new CountDownLatch(1)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == marker) markerJob = e.jobId
+        else jobs.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerDone.countDown()
+    }
+    def jobsIn[T](f: => T): (T, Int) = {
+      l.jobs.set(0)
+      l.markerDone = new CountDownLatch(1)
+      val out = f
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(l.markerDone.await(30, TimeUnit.SECONDS))
+      (out, l.jobs.get())
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val (batch, _) = jobsIn(Tables(spark, sfDir, "events"))
+      val (stream, n) = jobsIn(Tables.stream(spark, sfDir, "events"))
+      assert(n == 0, "the stream view re-read the footer")
+      assert(stream.isStreaming && stream.schema == batch.schema)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

@@ -590,4 +590,17 @@ class StreamsSpec extends SparkSpec {
     assert(spark.streams.active.isEmpty)
     assert(tempViews == before)
   }
+
+  test("drainCheckpoint: the state store holds the batch result, and no " +
+      "sink rows, query or view remain") {
+    val (stream, batch) = drainSource()
+    val ck = tmp("ck")
+    val before = tempViews
+    Streams.drainCheckpoint(stream.groupBy("user_id").count(), "update", 2, ck)
+    assert(spark.streams.active.isEmpty)
+    assert(tempViews == before)
+    val state = spark.read.format("statestore").load(ck)
+      .select(col("key.user_id").as("user_id"), col("value.count").as("count"))
+    assert(rows(state) == rows(batch.groupBy("user_id").count()))
+  }
 }
