@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftSqlBridge.{Mat, materialize, release}
 import org.apache.spark.sql.functions._
 
 /** Connected components over a pair graph — the step that turns near-dup
@@ -21,8 +22,8 @@ import org.apache.spark.sql.functions._
   * per-round METADATA aggregate (the label checksum for the convergence
   * test); labels live in a DataFrame throughout — nothing per-vertex ever
   * reaches the driver, and each round's label frame is eagerly
-  * materialized (localCheckpoint) so lineage stays flat, the same
-  * discipline as Similarity.ivfTopKKmeans. This is the alternating-star
+  * materialized with exact statistics (GraftSqlBridge.materialize) so
+  * lineage stays flat and the planner sizes every join on it. This is the alternating-star
   * family of MapReduce CC algorithms (Kiveris et al., "Connected
   * Components in MapReduce and Beyond") in DataFrame form.
   *
@@ -42,24 +43,23 @@ object Components {
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
       maxIters: Int = 50): DataFrame = {
-    val eR = matSummed(edges.select(col("src"), col("dst"))
+    val e = materialize(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct(), -1)
-    val e = eR._1
+      .distinct())
     // Min-propagation only ever lowers labels, so the label sum strictly
     // decreases until the fixpoint — an exact convergence test computed
-    // INSIDE each round's materializing job (matSummed), not as a
-    // separate aggregate action per round.
-    var r0 = matSummed(vertices.select(col("id"), col("id").as("label")), 1)
-    var labels = r0._1
-    var sum0 = r0._3
+    // INSIDE each round's materializing job, not as a separate aggregate
+    // action per round.
+    var labels = materialize(
+      vertices.select(col("id"), col("id").as("label")), 1)
     var iter = 0
     var converged = false
-    withLoopShuffle(edges.sparkSession, math.max(eR._2, r0._2)) {
+    withLoopShuffle(edges.sparkSession, math.max(e.rows, labels.rows)) {
     while (!converged && iter < maxIters) {
-      val nbrMin = e.join(labels.select(col("id").as("dst"), col("label").as("nl")), "dst")
+      val nbrMin = e.df
+        .join(labels.df.select(col("id").as("dst"), col("label").as("nl")), "dst")
         .groupBy(col("src").as("id")).agg(min(col("nl")).as("nbr"))
-      val stepped = labels.join(nbrMin, Seq("id"), "left")
+      val stepped = labels.df.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
       // Pointer-jumping: follow the label one hop (label <- label(label)).
@@ -67,16 +67,15 @@ object Components {
         .join(stepped.select(col("id").as("label"), col("label").as("ll")),
           Seq("label"), "left")
         .select(col("id"), coalesce(col("ll"), col("label")).as("label"))
-      val rn = matSummed(compressed, 1)
-      unmat(labels)
-      labels = rn._1
-      converged = rn._3.compareTo(sum0) == 0
-      sum0 = rn._3
+      val next = materialize(compressed, 1)
+      labels.release()
+      converged = next.sum.compareTo(labels.sum) == 0
+      labels = next
       iter += 1
     }
     }
-    unmat(e) // the returned plan reads only `labels`
-    labels.select(col("id"), col("label").as("component"))
+    e.release() // the returned plan reads only `labels`
+    labels.df.select(col("id"), col("label").as("component"))
   }
 
   /** Connected components via ALTERNATING large-star / small-star edge
@@ -92,7 +91,7 @@ object Components {
     *
     * Each half-round is one groupBy + one join + a distinct on edges
     * (two longs per edge — the same shuffle discipline as min-label
-    * propagation), the edge list is localCheckpoint'ed per round so
+    * propagation), the edge list is materialized per round so
     * lineage stays flat, and the driver sees only a (count, hash-sum)
     * convergence checksum. At the fixpoint the edge set IS the component
     * assignment: every non-root vertex holds exactly one edge to its
@@ -110,66 +109,42 @@ object Components {
       .filter(col("src") =!= col("dst")).distinct()
     def bidir(df: DataFrame): DataFrame = df
       .union(df.select(col("dst").as("src"), col("src").as("dst")))
-    // Each half-round joins the (bidirected) edge relation against its
-    // per-source min aggregate — a vertex-sized side the planner can
-    // only SortMergeJoin (stats-less materialized input, AQE off for
-    // metadata-scale rounds). [[bcIfSmall]] with the round's exact edge
-    // count as the bound (distinct src keys ≤ edge rows; bidir ≤ 2×)
-    // broadcasts the aggregate instead, removing the edge relation's
-    // per-half-round exchange+sort; corpus-scale rounds fail the gate
-    // and keep their shuffle plans (the q372/q433 discipline).
-    def largeStar(df: DataFrame, bound: Long): DataFrame = {
+    def largeStar(df: DataFrame): DataFrame = {
       val nbr = bidir(df)
       val mins = nbr.groupBy("src").agg(min(col("dst")).as("mn"))
         .select(col("src"), least(col("mn"), col("src")).as("m"))
-      canon(nbr.join(bcIfSmall(mins, 2L * bound), "src")
+      canon(nbr.join(mins, "src")
         .filter(col("dst") > col("src"))
         .select(col("dst").as("src"), col("m").as("dst")))
     }
-    def smallStar(df: DataFrame, bound: Long): DataFrame = {
+    def smallStar(df: DataFrame): DataFrame = {
       val mins = df.groupBy("src").agg(min(col("dst")).as("m"))
-      canon(df.join(bcIfSmall(mins, bound), "src")
+      canon(df.join(mins, "src")
         .select(col("dst").as("src"), col("m").as("dst"))
         .union(mins.select(col("src"), col("m").as("dst"))))
     }
     // Edge-set checksum: (count, exact sum of per-edge hashes), computed
-    // INSIDE each round's materializing job (the hash rides as a column
-    // through matSummed) — exact equality of consecutive rounds detects
-    // the fixpoint without a separate aggregate action per round.
+    // INSIDE each round's materializing job (the hash rides as a column)
+    // — exact equality of consecutive rounds detects the fixpoint
+    // without a separate aggregate action per round.
     def withH(df: DataFrame): DataFrame =
       df.withColumn("__h", xxhash64(col("src"), col("dst")))
-    var eR = matSummed(withH(canon(edges)), 2)
-    var e = eR._1
-    var cnt0 = eR._2
-    var sum0 = eR._3
+    var e = materialize(withH(canon(edges)), 2)
     var rounds = 0
-    var converged = cnt0 == 0L
-    withLoopShuffle(edges.sparkSession, cnt0) {
+    var converged = e.rows == 0L
+    withLoopShuffle(edges.sparkSession, e.rows) {
     while (!converged && rounds < maxIters) {
-      // smallStar's input is largeStar's output — at most cnt0 rows
-      // (one canonical edge per dst>src pair), so its min-aggregate has
-      // at most cnt0 distinct srcs: bound cnt0, not 2·cnt0 (r14, ADVICE —
-      // the doubled bound stopped broadcasting at half the
-      // threshold-implied scale).
-      val nR = matSummed(
-        withH(smallStar(largeStar(e.select("src", "dst"), cnt0),
-          cnt0)), 2)
-      unmat(e)
-      e = nR._1
-      converged = nR._2 == cnt0 && nR._3.compareTo(sum0) == 0
-      cnt0 = nR._2
-      sum0 = nR._3
+      val next = materialize(
+        withH(smallStar(largeStar(e.df.select("src", "dst")))), 2)
+      e.release()
+      converged = next.rows == e.rows && next.sum.compareTo(e.sum) == 0
+      e = next
       rounds += 1
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(s"[stars] round $rounds edges=$cnt0 sum=$sum0" +
-          s" t=${System.nanoTime() / 1000000L % 100000000}")
     }
     }
-    // At the fixpoint e holds one edge per non-root vertex — exactly
-    // cnt0 rows, so the label attach can broadcast it when small.
+    // At the fixpoint e holds one edge per non-root vertex.
     val labels = vertices
-      .join(bcIfSmall(
-          e.select(col("src").as("id"), col("dst").as("root")), cnt0),
+      .join(e.df.select(col("src").as("id"), col("dst").as("root")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("root"), col("id")).as("component"))
     (labels, rounds)
@@ -187,19 +162,17 @@ object Components {
     * @return (v, dg, n_tri, lcc) per node appearing in any edge
     */
   def localClustering(edges: DataFrame): DataFrame = {
-    val und = edges
+    val und = materialize(edges
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
+      .filter(col("src") =!= col("dst")).distinct()).df
     val bid = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
     val deg = bid.groupBy(col("src").as("v")).agg(count(lit(1)).as("dg"))
-    val o = bid
+    val o = materialize(bid
       .join(deg.select(col("v").as("src"), col("dg").as("dsrc")), "src")
       .join(deg.select(col("v").as("dst"), col("dg").as("ddst")), "dst")
       .filter(struct(col("dsrc"), col("src")) < struct(col("ddst"), col("dst")))
-      .select(col("src"), col("dst"))
-      .localCheckpoint(true)
+      .select(col("src"), col("dst"))).df
     val tri = o.select(col("src").as("a"), col("dst").as("b"))
       .join(o.select(col("src").as("b"), col("dst").as("c")), "b")
       .join(o.select(col("src").as("a"), col("dst").as("c")), Seq("a", "c"))
@@ -229,19 +202,17 @@ object Components {
     * @return one row: (n_edges, n_triangles), both BIGINT
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val und = edges
+    val und = materialize(edges
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
+      .filter(col("src") =!= col("dst")).distinct()).df
     val bid = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
     val deg = bid.groupBy(col("src").as("v")).agg(count(lit(1)).as("dg"))
-    val o = bid
+    val o = materialize(bid
       .join(deg.select(col("v").as("src"), col("dg").as("dsrc")), "src")
       .join(deg.select(col("v").as("dst"), col("dg").as("ddst")), "dst")
       .filter(struct(col("dsrc"), col("src")) < struct(col("ddst"), col("dst")))
-      .select(col("src"), col("dst"))
-      .localCheckpoint(true)
+      .select(col("src"), col("dst"))).df
     val wedges = o.select(col("src").as("a"), col("dst").as("b"))
       .join(o.select(col("src").as("b"), col("dst").as("c")), "b")
       .select(col("a"), col("c"))
@@ -269,13 +240,13 @@ object Components {
     * dangling vertices entirely. Per iteration: one join edges⋈ranks on
     * src + one aggregation on dst — the same two-longs-per-edge shuffle
     * discipline as [[connectedComponents]], with per-round
-    * localCheckpoint keeping lineage flat. */
+    * materialization keeping lineage flat. */
   def pageRankScaled(edges: DataFrame, iters: Int, scale: Long = 1000000L,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(true)
-    val vertices = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().localCheckpoint(true)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint(true)
+    val e = materialize(edges.select(col("src"), col("dst")).distinct()).df
+    val vertices = materialize(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct()).df
+    val outdeg = materialize(e.groupBy("src").agg(count(lit(1)).as("deg"))).df
     val tele = (dampDen - dampNum) * scale / dampDen
     var ranks = vertices.select(col("id"), lit(scale).as("r"))
     var i = 0
@@ -289,12 +260,11 @@ object Components {
         .select(col("src"), expr("r div deg").as("c"))
       val contrib = e.join(perSrc, "src")
         .groupBy(col("dst").as("id")).agg(sum(col("c")).as("s"))
-      val next = vertices
+      val next = materialize(vertices
         .join(contrib, Seq("id"), "left")
         .select(col("id"),
-          (lit(tele) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("r"))
-        .localCheckpoint(true)
-      ranks.unpersist()
+          (lit(tele) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("r"))).df
+      release(ranks)
       ranks = next
       i += 1
     }
@@ -312,16 +282,14 @@ object Components {
   def personalizedPageRankScaled(edges: DataFrame, seeds: DataFrame,
       iters: Int, scale: Long = 1000000L, dampNum: Long = 85L,
       dampDen: Long = 100L): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(true)
+    val e = materialize(edges.select(col("src"), col("dst")).distinct()).df
     val vertices = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    val v = vertices
+    val v = materialize(vertices
       .join(seeds.select(col("id")).distinct()
         .withColumn("is_seed", lit(1L)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-      .localCheckpoint(true)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))).df
+    val outdeg = materialize(e.groupBy("src").agg(count(lit(1)).as("deg"))).df
     val tele = (dampDen - dampNum) * scale / dampDen
     var ranks = v.select(col("id"), (col("is_seed") * scale).as("r"))
     var i = 0
@@ -331,10 +299,10 @@ object Components {
         .select(col("src"), expr("r div deg").as("c"))
       val contrib = e.join(perSrc, "src")
         .groupBy(col("dst").as("id")).agg(sum(col("c")).as("s"))
-      val next = v.join(contrib, Seq("id"), "left")
+      val next = materialize(v.join(contrib, Seq("id"), "left")
         .select(col("id"), (col("is_seed") * tele +
-          expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("r"))
-        .localCheckpoint(true)
+          expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("r"))).df
+      release(ranks)
       ranks = next
       i += 1
     }
@@ -348,11 +316,11 @@ object Components {
     * FRONTIER (only the newly reached vertices, never the visited set)
     * joins the edge list once — a frontier-sized keyed shuffle of two
     * longs — and an anti-join against the visited set drops
-    * already-levelled vertices; per-round localCheckpoint keeps lineage
+    * already-levelled vertices; per-round materialization keeps lineage
     * flat like [[connectedComponentsStars]]. On a 100 TB graph each
     * round's cost is O(edges incident to the frontier), and the depth
-    * bound caps the round count; the early-exit `isEmpty` probe is a
-    * metadata-sized driver check.
+    * bound caps the round count; the early exit reads the frontier's
+    * row count from its materializing job.
     *
     * @param edges (src, dst) pairs; direction/duplicates ignored
     * @return (node, depth) — every vertex within `maxDepth` hops of `src`
@@ -373,8 +341,8 @@ object Components {
     val und0 = edges.select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-    und0.union(und0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    materialize(
+      und0.union(und0.select(col("dst").as("src"), col("src").as("dst")))).df
   }
 
   /** [[bfsLevels]] over an edge list already materialized by
@@ -384,36 +352,31 @@ object Components {
       maxDepth: Int): DataFrame = {
     val spark = und.sparkSession
     import spark.implicits._
-    // Per-round materialization stays `localCheckpoint` ON PURPOSE (not
-    // [[mat]]): the checkpoint rewrites stats to the ACTUAL frontier
-    // size, so Catalyst auto-broadcasts the (small) frontier into the
-    // edge join — a [[mat]] frame gets default LogicalRDD stats and
-    // silently degrades every round to a full edge shuffle (measured
-    // 3x). BFS has no self-join, so the stats-squaring pathology that
-    // forces [[mat]] in the pointer-jump loops cannot occur here. The
-    // dedup anti-join needs only the LAST TWO levels, not the full
-    // visited set: in an undirected graph a neighbor of a depth-d vertex
-    // has depth >= d-1 (else that vertex would be closer than d), so any
-    // already-reached candidate sits in level d or d-1. That keeps the
-    // per-round anti-join O(|frontier|), independent of total reach.
-    var levels = List(Seq((src, 0)).toDF("node", "depth").localCheckpoint(true))
+    // The frontier's exact statistics let the planner broadcast the
+    // (small) frontier into the edge join; without them every round
+    // degrades to a full edge shuffle (measured 3x). The dedup anti-join
+    // needs only the LAST TWO levels, not the full visited set: in an
+    // undirected graph a neighbor of a depth-d vertex has depth >= d-1
+    // (else that vertex would be closer than d), so any already-reached
+    // candidate sits in level d or d-1. That keeps the per-round
+    // anti-join O(|frontier|), independent of total reach.
+    var frontier = materialize(Seq((src, 0)).toDF("node", "depth"))
+    var levels = List(frontier.df)
     var prev: DataFrame = null
-    var frontier = levels.head
     var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
+    while (depth < maxDepth && frontier.rows > 0) {
       depth += 1
+      val cur = frontier.df
       val recent =
-        if (prev == null) frontier.select("node")
-        else frontier.select("node").union(prev.select("node"))
-      val fr = frontier.select("node")
-      val next = fr.join(und, fr("node") === und("src"))
+        if (prev == null) cur.select("node")
+        else cur.select("node").union(prev.select("node"))
+      val fr = cur.select("node")
+      frontier = materialize(fr.join(und, fr("node") === und("src"))
         .select(col("dst").as("node")).distinct()
         .join(recent, Seq("node"), "left_anti")
-        .withColumn("depth", lit(depth))
-        .localCheckpoint(true)
-      levels ::= next
-      prev = frontier
-      frontier = next
+        .withColumn("depth", lit(depth)))
+      levels ::= frontier.df
+      prev = cur
     }
     levels.reduce(_ union _)
   }
@@ -423,7 +386,7 @@ object Components {
     * instead of k (the landmark-embedding primitive: approximate
     * d(u,v) <= min over landmarks of d(u,L)+d(L,v)). Same per-round
     * shape as [[bfsLevels]]: frontier-edge join + anti-join against the
-    * lazily-unioned checkpointed levels; rows are (node, root, depth)
+    * lazily-unioned materialized levels; rows are (node, root, depth)
     * triples — k longs per reached node at worst, shuffled on ids.
     *
     * @return (node, root, depth): minimal hop count from each root that
@@ -447,26 +410,24 @@ object Components {
     require(sources.nonEmpty, "sources must be non-empty")
     val spark = und.sparkSession
     import spark.implicits._
-    var levels = List(sources.map(r => (r, r, 0))
-      .toDF("node", "root", "depth").localCheckpoint(true))
+    var frontier = materialize(sources.map(r => (r, r, 0))
+      .toDF("node", "root", "depth"))
+    var levels = List(frontier.df)
     var prev: DataFrame = null
-    var frontier = levels.head
     var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
+    while (depth < maxDepth && frontier.rows > 0) {
       depth += 1
+      val cur = frontier.df
       val recent =
-        if (prev == null) frontier.select("node", "root")
-        else frontier.select("node", "root")
-          .union(prev.select("node", "root"))
-      val fr = frontier.select("node", "root")
-      val next = fr.join(und, fr("node") === und("src"))
+        if (prev == null) cur.select("node", "root")
+        else cur.select("node", "root").union(prev.select("node", "root"))
+      val fr = cur.select("node", "root")
+      frontier = materialize(fr.join(und, fr("node") === und("src"))
         .select(col("dst").as("node"), col("root")).distinct()
         .join(recent, Seq("node", "root"), "left_anti")
-        .withColumn("depth", lit(depth))
-        .localCheckpoint(true)
-      levels ::= next
-      prev = frontier
-      frontier = next
+        .withColumn("depth", lit(depth)))
+      levels ::= frontier.df
+      prev = cur
     }
     levels.reduce(_ union _)
   }
@@ -512,7 +473,7 @@ object Components {
     // result materializes (rounds is small, two longs per edge) —
     // lineage is truncated, so none may be unpersisted while a
     // downstream frame still reads it.
-    val (e0, n0, _) = matSummed(und, -1)
+    val Mat(e0, n0, _) = materialize(und)
     // r13: the surviving-edge state is VIRTUAL — `live` anti-joins the
     // materialized-once input against the cumulative matched-vertex set
     // (vertex-sized, grows by the round's matches; matched vertices are
@@ -523,23 +484,13 @@ object Components {
     // while the matched set is small; at corpus scale the runtime plan
     // flips to shuffle — the scale-adaptive posture.
     var matched: DataFrame = null
-    // Exact cumulative matched-vertex count (from the summed
-    // materialization below) → [[bcIfSmall]] hints on the anti-join
-    // sides. AQE is on here (edge-sized loop shuffles), but its runtime
-    // SMJ→broadcast conversion only fires AFTER both sides' shuffle
-    // files are written — the static hint removes the e0 relation's
-    // per-round shuffle writes entirely. Corpus-scale matched sets fail
-    // the gate and keep the runtime-adaptive shuffle plan.
-    var nMatched = -1L
     var out: DataFrame = null
     withLoopShuffle(spark, n0) {
       for (r <- 1 to rounds) {
         val live = if (matched == null) e0
           else e0
-            .join(bcIfSmall(matched.select(col("x").as("u")), nMatched),
-              Seq("u"), "left_anti")
-            .join(bcIfSmall(matched.select(col("x").as("v")), nMatched),
-              Seq("v"), "left_anti")
+            .join(matched.select(col("x").as("u")), Seq("u"), "left_anti")
+            .join(matched.select(col("x").as("v")), Seq("v"), "left_anti")
         // best neighbor per vertex as a partial-aggregable argmax —
         // max(struct(w, -v)) = (max weight, then min id), identical to
         // the former `row_number over (w desc, v asc) = 1` window but
@@ -553,18 +504,16 @@ object Components {
           .agg(max(struct(col("w"), (-col("v")).as("nv"))).as("b"))
           .select(col("u"), (-col("b.nv")).as("v"))
         val swapped = best.select(col("v").as("u"), col("u").as("v"))
-        val m = mat(best.join(swapped, Seq("u", "v"), "left_semi")
+        val m = materialize(best.join(swapped, Seq("u", "v"), "left_semi")
           .filter(col("u") < col("v"))
-          .withColumn("round", lit(r.toLong)))
+          .withColumn("round", lit(r.toLong))).df
         out = if (out == null) m else out.unionByName(m)
         if (r < rounds) {
           val prevMatched = matched
           val mvNew = m.select(explode(array(col("u"), col("v"))).as("x"))
-          val mR = matSummed(if (prevMatched == null) mvNew
-            else prevMatched.unionByName(mvNew), -1)
-          matched = mR._1
-          nMatched = mR._2
-          unmat(prevMatched)
+          matched = materialize(if (prevMatched == null) mvNew
+            else prevMatched.unionByName(mvNew)).df
+          release(prevMatched)
         }
       }
     }
@@ -581,8 +530,8 @@ object Components {
     * absorbed — dropping them provably preserves the per-round result),
     * so round cost is O(edges incident to the improved set), not
     * O(all edges). Parallel-duplicate edges collapse to their min weight
-    * up front; per-round localCheckpoint keeps lineage flat; the
-    * early-exit probe is metadata-sized.
+    * up front; per-round materialization keeps lineage flat, and its
+    * in-job sum of the improved flag is the early-exit probe.
     *
     * @param edges (src, dst, w) triples, w ≥ 0
     * @param uniqueEdges caller guarantees one row per (src, dst) —
@@ -594,31 +543,25 @@ object Components {
       uniqueEdges: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = (if (uniqueEdges) edges.select("src", "dst", "w")
-             else edges.groupBy("src", "dst").agg(min(col("w")).as("w")))
-      .localCheckpoint(true)
-    var dist = Seq((src, 0L)).toDF("node", "dist").localCheckpoint(true)
+    val e = materialize(
+      if (uniqueEdges) edges.select("src", "dst", "w")
+      else edges.groupBy("src", "dst").agg(min(col("w")).as("w"))).df
+    var dist = materialize(Seq((src, 0L)).toDF("node", "dist")).df
     var frontier = dist
-    // r14 OPT (guide §3.1/§2.4): the relax join's left side is the
-    // FRONTIER — vertex-sized at most and a single row in round 1 — but
-    // as a stats-less checkpoint it could only SortMergeJoin, shuffling
-    // the ENTIRE edge relation once per round. The frontier size is
-    // exact and free: __improved rides the merge as a LONG so
-    // matSummed's in-job checksum returns it (replacing the separate
-    // per-round isEmpty action), and [[bcIfSmall]] re-makes the
-    // planner's own broadcast decision from it — corpus-scale frontiers
-    // fail the session-threshold gate and keep the shuffle plan.
+    // The frontier size is exact and free: __improved rides the merge as
+    // a LONG so the materializing job's in-job sum returns it (replacing
+    // a separate per-round isEmpty action).
     var nFrontier = 1L
     var prevMerged: DataFrame = null
     var round = 0
     while (round < rounds && nFrontier > 0) {
       round += 1
-      val relax = bcIfSmall(frontier, nFrontier)
+      val relax = frontier
         .join(e, frontier("node") === e("src"))
         .select(e("dst").as("node"),
           (frontier("dist") + e("w")).as("dist"))
         .groupBy("node").agg(min("dist").as("dist"))
-      val mR = matSummed(dist.as("d")
+      val merged = materialize(dist.as("d")
         .join(relax.as("r"), Seq("node"), "full_outer")
         .select(col("node"),
           least(coalesce(col("d.dist"), lit(Long.MaxValue)),
@@ -626,12 +569,12 @@ object Components {
           (col("d.dist").isNull ||
             (col("r.dist").isNotNull && col("r.dist") < col("d.dist")))
             .cast("long").as("__improved")), 2)
-      unmat(prevMerged)
-      prevMerged = mR._1
-      nFrontier = mR._3.longValue()
-      frontier = mR._1.filter(col("__improved") === 1L)
+      release(prevMerged)
+      prevMerged = merged.df
+      nFrontier = merged.sum.longValue()
+      frontier = merged.df.filter(col("__improved") === 1L)
         .select("node", "dist")
-      dist = mR._1.select("node", "dist")
+      dist = merged.df.select("node", "dist")
     }
     dist
   }
@@ -650,8 +593,9 @@ object Components {
     * 100 TB posture: each round is one degree aggregation plus two
     * edge⋈alive semi joins — everything shuffled on vertex ids, two longs
     * per edge, nothing vertex- or edge-sized on the driver (the
-    * convergence probe is the CC/SSSP (count, hash-sum) checksum).
-    * Lineage stays flat via per-round localCheckpoint.
+    * convergence probe is the CC/SSSP (count, hash-sum) checksum,
+    * computed in each round's materializing job). Lineage stays flat via
+    * per-round materialization.
     *
     * @param edges (src, dst) pairs; symmetrized and de-duplicated here
     * @return surviving (node, core_deg) — degree within the k-core
@@ -671,14 +615,12 @@ object Components {
     * has no live edges and wins its round automatically.
     *
     * 100 TB posture: shuffles carry (src, dst) / (v, priority) longs
-    * only; per-round localCheckpoint flattens lineage; winners
+    * only; per-round materialization flattens lineage; winners
     * accumulate as materialized per-round frames unioned lazily at the
     * end. Returns (node, mis_round) for vertices that entered the MIS
     * within `rounds`. */
   def lubyMis(edges: DataFrame, rounds: Int,
       symmetricInput: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge.{
-      materializeTruncated, materializeTruncatedSummed, unpersistMaterialized}
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val pri = struct(xxhash64(col("v")).as("h"), col("v").as("i"))
     // symmetricInput: the caller guarantees `edges` is already
@@ -688,22 +630,13 @@ object Components {
     // wall time — is skipped. Round 1 then scans the input relation
     // directly (columnar scans, no materialization job needed).
     var e = if (symmetricInput) edges.select("src", "dst")
-      else materializeTruncated(prepareUndirected(edges))
+      else prepareUndirected(edges)
     // No prepared active set: active is by construction exactly the
     // src key set of the symmetric edge relation, which is exactly
     // nbrMin's grouping keys, so round 1 reads winners straight off
     // the aggregate (nb is never null there) and later rounds carry
     // the survivor set forward.
     var active: DataFrame = null
-    // Exact count of `active` (known from each round's summed
-    // materialization) — feeds [[bcIfSmall]] hints on every join of the
-    // EDGE relation against vertex-sized state: those sides are
-    // stats-less materialized frames the planner can only SortMergeJoin
-    // (exchanging the edge relation — the algorithm's biggest — on src
-    // and again on dst every round). The hint is gated on the session
-    // broadcast threshold with the exact count, so corpus-scale rounds
-    // keep their shuffle plans (the q372 discipline, change #7).
-    var nActive: Long = -1L
     val misParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var r = 0
     var done = false
@@ -719,90 +652,70 @@ object Components {
       // subtree from both the survivor anti-join and the output union
       // in one fused job re-evaluated that aggregate three times and
       // was measured SLOWER (7.8 s vs 5.6 s idle at sf0.1), not faster.
-      // nbrMin's group count is bounded by the active count (e's src
-      // keys are exactly the active set), so the hint bound is exact.
       val flaggedPlan =
         if (r == 1) nbrMin.select(col("v"),
           (pri < col("nb")).cast("long").as("w"))
-        else active.join(bcIfSmall(nbrMin, nActive), Seq("v"), "left")
+        else active.join(nbrMin, Seq("v"), "left")
           .select(col("v"),
             (col("nb").isNull || pri < col("nb")).cast("long").as("w"))
       // flagged backs this round's misParts slice, so it stays pinned
       // for the call's lifetime — vertex-sized and shrinking
       // geometrically, unlike the per-round EDGE relation below.
-      // Summing the 0/1 winner flag in the materializing job gives the
-      // exact winner count for free (same job, no extra action).
-      val (flagged, nFlag, wSum) = materializeTruncatedSummed(flaggedPlan, 1)
-      val nWinners = wSum.longValueExact()
+      val flagged = materialize(flaggedPlan).df
       misParts += flagged.filter(col("w") === 1L)
         .select(col("v"), lit(r.toLong).as("mis_round"))
       val nbrOfWinners = e
-        .join(bcIfSmall(
-            flagged.filter(col("w") === 1L).select(col("v").as("src")),
-            nWinners),
+        .join(flagged.filter(col("w") === 1L).select(col("v").as("src")),
           Seq("src"), "left_semi")
         .select(col("dst").as("v")).distinct()
       // Survivor materialization doubles as the emptiness probe (count
       // folded into the materializing job — no separate isEmpty action).
-      // nbrOfWinners ⊆ the active set (e is active×active), so nFlag
-      // bounds it exactly enough for the gate.
-      val (nextActive, nAct, _) = materializeTruncatedSummed(
+      val Mat(nextActive, nAct, _) = materialize(
         flagged.filter(col("w") === 0L).select("v")
-          .join(bcIfSmall(nbrOfWinners, nFlag), Seq("v"), "left_anti"), -1)
+          .join(nbrOfWinners, Seq("v"), "left_anti"))
       done = nAct == 0L
       val prevE = e
       val prevActive = active
       if (!done && r < rounds) {
-        e = materializeTruncated(e
-          .join(bcIfSmall(nextActive.select(col("v").as("src")), nAct),
-            Seq("src"), "left_semi")
-          .join(bcIfSmall(nextActive.select(col("v").as("dst")), nAct),
-            Seq("dst"), "left_semi")
-          .select("src", "dst"))
+        e = materialize(e
+          .join(nextActive.select(col("v").as("src")), Seq("src"), "left_semi")
+          .join(nextActive.select(col("v").as("dst")), Seq("dst"), "left_semi")
+          .select("src", "dst")).df
       }
       active = nextActive
-      nActive = nAct
       // Every consumer of the previous round's frames has now executed
       // (flagged, nextActive, next e are all materialized) — release
       // their blocks so a many-round run doesn't pin every round's
       // edge relation for the session lifetime. (Round 1's prevE may be
-      // the caller's un-materialized input — unpersistMaterialized is a
-      // no-op on anything but a LogicalRDD.)
-      unpersistMaterialized(prevE)
-      if (prevActive != null) unpersistMaterialized(prevActive)
+      // the caller's input, on which release is a no-op.)
+      release(prevE)
+      release(prevActive)
     }
     misParts.reduce(_ union _).select(col("v").as("node"), col("mis_round"))
   }
 
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
-    def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        graft.ops.Exact.sum(xxhash64(col("src"), col("dst")))).head
-      (r.getLong(0), r.getDecimal(1))
-    }
-    var e = edges.select(col("src"), col("dst"))
+    def withH(df: DataFrame): DataFrame =
+      df.withColumn("__h", xxhash64(col("src"), col("dst")))
+    var e = materialize(withH(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
-    var sum0 = checksum(e)
+      .filter(col("src") =!= col("dst")).distinct()), 2)
     var rounds = 0
-    var converged = e.isEmpty
+    var converged = e.rows == 0L
     while (!converged && rounds < maxRounds) {
-      val alive = e.groupBy("src").agg(count(lit(1)).as("deg"))
+      val cur = e.df.select("src", "dst")
+      val alive = cur.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("v"))
-      val next = e
+      val next = materialize(withH(cur
         .join(alive.select(col("v").as("src")), Seq("src"), "left_semi")
         .join(alive.select(col("v").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")
-        .localCheckpoint(true)
-      val sum1 = checksum(next)
-      e.unpersist()
+        .select("src", "dst")), 2)
+      e.release()
+      converged = next.rows == e.rows && next.sum.compareTo(e.sum) == 0
       e = next
-      converged = sum1 == sum0
-      sum0 = sum1
       rounds += 1
     }
-    e.groupBy("src").agg(count(lit(1)).as("core_deg"))
+    e.df.groupBy("src").agg(count(lit(1)).as("core_deg"))
       .select(col("src").as("node"), col("core_deg"))
   }
 
@@ -818,7 +731,7 @@ object Components {
     * 100 TB posture: each round is two edge⋈edge equi-joins keyed on
     * vertex ids (two longs per row) + one (u, v) support aggregation —
     * wedge space bounded by per-vertex degree, nothing driver-sized;
-    * lineage flattened with per-round localCheckpoint.
+    * lineage flattened with per-round materialization.
     *
     * @param edges (src, dst) in any orientation; canonicalized u<v here
     * @return surviving (u, v, support) under the final peel
@@ -826,11 +739,10 @@ object Components {
   def kTruss(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val thr = k - 2
-    var e = edges
+    var e = materialize(edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
+      .filter(col("u") =!= col("v")).distinct()).df
     var out = e.select(col("u"), col("v"), lit(0L).as("support")).limit(0)
     for (_ <- 1 to rounds) {
       val tri = e.select(col("u").as("a"), col("v").as("b"))
@@ -843,8 +755,10 @@ object Components {
         .union(tri.select(col("b").as("u"), col("c").as("v")))
         .union(tri.select(col("a").as("u"), col("c").as("v")))
         .groupBy("u", "v").agg(count(lit(1)).as("support"))
-      out = sup.filter(col("support") >= thr).localCheckpoint(true)
-      e.unpersist()
+      val prev = out
+      out = materialize(sup.filter(col("support") >= thr)).df
+      release(e)
+      release(prev)
       e = out.select("u", "v")
     }
     out
@@ -861,28 +775,25 @@ object Components {
     * vertex id, two longs per row) + one (vertex, label) count + one
     * per-vertex argmax via max(struct(cnt, -label)) — a map-side-
     * combined aggregate, NO window over the corpus. Lineage stays flat
-    * via per-round localCheckpoint; the driver never sees a vertex.
+    * via per-round materialization; the driver never sees a vertex.
     *
     * @return (node, label) after `rounds` synchronous updates
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    val ue = edges.select(col("src"), col("dst"))
+    val ue = materialize(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
-    var lab = ue.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
+      .filter(col("src") =!= col("dst")).distinct()).df
+    var lab = materialize(ue.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label"))).df
     for (_ <- 1 to rounds) {
-      val next = ue
+      val next = materialize(ue
         .join(lab.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("src"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-        .select(col("src").as("node"), (-col("m.nl")).as("label"))
-        .localCheckpoint(true)
-      lab.unpersist()
+        .select(col("src").as("node"), (-col("m.nl")).as("label"))).df
+      release(lab)
       lab = next
     }
     lab
@@ -899,7 +810,7 @@ object Components {
     * over its whole cycle — the canonical cycle id.
     *
     * O(log n) rounds where naive walking is O(n); each round one
-    * self-join on ids (two longs per node), per-round localCheckpoint
+    * self-join on ids (two longs per node), per-round materialization
     * keeps lineage flat, nothing per-node reaches the driver.
     *
     * @param succ two columns `id`, `p` (u -> f(u), total function)
@@ -910,28 +821,24 @@ object Components {
   def functionalGraphCycles(succ: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // The doubling state is |V| rows EXACTLY, every round (p is a total
-    // function) — one summed materialization up front gives the count
-    // that lets [[bcIfSmall]] broadcast the self-join's build side and
-    // the closing joins (stats-less mat frames otherwise SortMergeJoin
-    // every round — the q372/q433/q344 discipline).
-    var (df, nV, _) = matSummed(
-      succ.select(col("id"), col("p"), col("id").as("mn")), -1)
+    // function); exact statistics keep the self-join's estimate from
+    // squaring round over round.
+    var df = materialize(
+      succ.select(col("id"), col("p"), col("id").as("mn"))).df
     for (_ <- 1 to rounds) {
-      val next = df.as("a")
-        .join(bcIfSmall(df, nV).as("b"), col("a.p") === col("b.id"))
+      val next = materialize(df.as("a")
+        .join(df.as("b"), col("a.p") === col("b.id"))
         .select(col("a.id").as("id"), col("b.p").as("p"),
-          least(col("a.mn"), col("b.mn")).as("mn"))
-        .transform(mat)
-      unmat(df) // Dataset.unpersist cannot reach mat's RDD — see unmat
+          least(col("a.mn"), col("b.mn")).as("mn"))).df
+      release(df)
       df = next
     }
     val anchors = df.select(col("p")).distinct()
     val cycleMin = df.select(col("id").as("p"), col("mn"))
-      .join(bcIfSmall(anchors, nV), Seq("p"), "left_semi")
+      .join(anchors, Seq("p"), "left_semi")
     df.select(col("id"), col("p"))
-      .join(bcIfSmall(cycleMin, nV), Seq("p"))
-      .join(bcIfSmall(anchors.select(col("p").as("id"),
-          lit(true).as("__cyc")), nV),
+      .join(cycleMin, Seq("p"))
+      .join(anchors.select(col("p").as("id"), lit(true).as("__cyc")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("__cyc"), lit(false)).as("on_cycle"),
         col("mn").as("cycle_id"))
@@ -948,15 +855,14 @@ object Components {
     *
     * Scale shape: each half-round is one edge⋈score equi-join + one
     * keyed sum — edge-sized shuffles of (long, long), nothing
-    * node-quadratic; the deduped edge list is checkpointed once and
+    * node-quadratic; the deduped edge list is materialized once and
     * reused by all 2·rounds half-steps. int64 bound: scores grow like
     * (d_hub·d_auth)^rounds; at rounds=2 that is ~1e9 even at 1e3-degree
     * hubs — switch `score` to DECIMAL(38,0) before raising `rounds` on
     * heavier graphs. */
   def hitsExact(edges: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
+    val e = materialize(edges.select(col("src"), col("dst")).distinct()).df
     var hub = e.select(col("src").as("id")).distinct()
       .withColumn("score", lit(1L))
     var auth: DataFrame = null
@@ -980,29 +886,20 @@ object Components {
   private def colorToFixpoint(nodes: DataFrame, e: DataFrame,
       maxInner: Int): DataFrame = {
     // the Σc convergence checksum rides INSIDE each round's
-    // materializing job (matSummed) — a separate aggregate job per
-    // round doubled the per-round fixed cost of this many-round loop
-    var r0 = matSummed(nodes.select(col("id"), col("id").as("c")), 1)
-    var ptr = r0._1
-    val nNodes = r0._2 // constant: step() keeps every id (union with p)
-    var digest = r0._3
+    // materializing job — a separate aggregate job per round doubled the
+    // per-round fixed cost of this many-round loop
+    var ptr = materialize(nodes.select(col("id"), col("id").as("c")), 1)
     var converged = false
     var inner = 0
     // One propagation step: c'(v) = max(c(v), max over in-edges of
     // c(u), c(c(v))) — edge relax plus pointer jump, monotone
-    // non-decreasing per vertex. The color-state sides carry a
-    // [[bcIfSmall]] hint (exact count nNodes): without it each round's
-    // two joins are SortMergeJoins over stats-less materialized state.
+    // non-decreasing per vertex.
     def step(p: DataFrame): DataFrame = {
       val fromEdges = e
-        .join(bcIfSmall(
-            p.select(col("id").as("src"), col("c").as("cand")), nNodes),
-          Seq("src"))
+        .join(p.select(col("id").as("src"), col("c").as("cand")), Seq("src"))
         .select(col("dst").as("id"), col("cand"))
       val fromJump = p.as("p")
-        .join(bcIfSmall(
-            p.select(col("id").as("c0"), col("c").as("cand")), nNodes)
-            .as("j"),
+        .join(p.select(col("id").as("c0"), col("c").as("cand")).as("j"),
           col("p.c") === col("j.c0"))
         .select(col("p.id").as("id"), col("cand"))
       p.select(col("id"), col("c").as("cand"))
@@ -1017,18 +914,14 @@ object Components {
     // is the measured optimum; don't re-fuse.
     while (!converged && inner < maxInner) {
       inner += 1
-      val rn = matSummed(step(ptr), 1)
-      val nd = rn._3 // monotone non-decreasing: equal sum = fixpoint
-      converged = nd.compareTo(digest) == 0
-      digest = nd
-      unmat(ptr)
-      ptr = rn._1
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(s"[scc-color] round $inner" +
-          s" t=${System.nanoTime() / 1000000L % 100000000}")
+      val next = materialize(step(ptr.df), 1)
+      // monotone non-decreasing: equal sum = fixpoint
+      converged = next.sum.compareTo(ptr.sum) == 0
+      ptr.release()
+      ptr = next
     }
     require(converged, s"SCC coloring did not converge in $maxInner rounds")
-    ptr
+    ptr.df
   }
 
   /** Strongly connected components of a directed edge list via the
@@ -1061,38 +954,15 @@ object Components {
     *      acyclic depth).
     *
     * Shuffle discipline matches [[connectedComponentsStars]]: every
-    * round moves two-longs-per-edge relations, per-round localCheckpoint
+    * round moves two-longs-per-edge relations, per-round materialization
     * truncates lineage, the driver sees only count/sum convergence
     * checksums (metadata scalars, never vertex data). Returns
     * (scc_id = min member id, id, scc_size). */
   def stronglyConnectedComponents(edges: DataFrame, maxOuter: Int = 25,
       maxInner: Int = 60): DataFrame = sccBody(edges, maxOuter, maxInner)
 
-  /** Eager materialization with stats truncation — REQUIRED (not an
-    * optimization) for the pointer-jump loops here: see
-    * [[org.apache.spark.sql.GraftSqlBridge.materializeTruncated]] for
-    * the sizeInBytes-squaring pathology a plain localCheckpoint hits. */
-  private def mat(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.materializeTruncated(df)
-
-  /** Release a [[mat]]-round's BlockManager blocks once every consumer
-    * (including the NEXT round's `mat`, whose count() forces its own
-    * blocks) has run — without this every round of a BSP loop stays
-    * pinned for the session lifetime, and `Dataset.unpersist` cannot
-    * reach these RDDs (they are not in the Dataset cache manager). */
-  private def unmat(df: DataFrame): Unit =
-    if (df != null)
-      org.apache.spark.sql.GraftSqlBridge.unpersistMaterialized(df)
-
-  /** [[mat]] plus (row count, exact Σ of the LONG column at `sumCol`;
-    * -1 = count only) computed in the materializing job itself — the
-    * per-round convergence checksum without a second action. */
-  private def matSummed(df: DataFrame, sumCol: Int):
-      (DataFrame, Long, java.math.BigDecimal) =
-    org.apache.spark.sql.GraftSqlBridge.materializeTruncatedSummed(df, sumCol)
-
   /** Run a BSP loop with `spark.sql.shuffle.partitions` sized to the
-    * loop's actual state (`rows`, known for free from [[matSummed]]):
+    * loop's actual state (`rows`, the exact count [[materialize]] returns):
     * ~50k rows per partition, capped at the session default. At 100 TB
     * the state is corpus-scale and this IS the session default; at
     * small scale it removes the dominant cost of a many-round loop —
@@ -1122,53 +992,18 @@ object Components {
     }
   }
 
-  /** Broadcast hint for a loop-round join side whose EXACT row count
-    * the loop already carries (from [[matSummed]]'s in-job checksums).
-    * Materialized loop state deliberately has no statistics (see
-    * GraftSqlBridge.materializeTruncated — LogicalRDD default stats =
-    * never auto-broadcast, which is correct for the EDGE relation), and
-    * [[withLoopShuffle]] turns AQE off for metadata-scale rounds, so
-    * the planner can neither plan nor runtime-convert these joins to
-    * broadcast: every per-round semi/anti/equi join against a
-    * vertex-state side otherwise becomes SortMergeJoin — two exchanges
-    * plus two sorts of per-round relations, pure critical-path stage
-    * waves at the local job floor. The hint restores exactly the
-    * decision the planner would make WITH stats: gate on the session's
-    * own `autoBroadcastJoinThreshold` (no new constant; `-1` disables
-    * this too), sized as rows × (16 + 8·width) — 8 B per column of loop
-    * state (longs) plus 16 B of per-row HashedRelation/key overhead.
-    * For the dominant two-column sides this is exactly the previous
-    * flat 32 B (measured across five loop families in r13); wider sides
-    * (e.g. the 3-long functional-cycle state) now gate tighter instead
-    * of under-counting (r14, ADVICE). At corpus scale the known count
-    * exceeds the threshold and the join keeps its shuffle plan — the
-    * decision is re-made per round from exact data, never a local[32]
-    * constant. */
-  private[llm] def bcIfSmall(df: DataFrame, rows: Long): DataFrame = {
-    val thresh = org.apache.spark.sql.GraftSqlBridge
-      .autoBroadcastThreshold(df.sparkSession)
-    val rowBytes = 16L + 8L * df.schema.size
-    if (rows >= 0 && thresh > 0 && rows * rowBytes <= thresh)
-      org.apache.spark.sql.functions.broadcast(df)
-    else df
-  }
-
   private def sccBody(edges: DataFrame, maxOuter: Int,
       maxInner: Int): DataFrame = {
-    // Per-round job ledger: every mat carries its row count in the SAME
-    // job (matSummed with sumCol = -1), so the loop never pays a
-    // separate isEmpty/count action; assigned SCCs accumulate in a
-    // driver-side buffer of already-materialized frames (metadata-sized
-    // handles) and union lazily at the end — the earlier running
-    // re-materialized union cost one extra job per round.
-    var eR = matSummed(edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct(), -1)
-    var e = eR._1
-    var nE = eR._2
-    var remR = matSummed(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct(), -1)
-    var remaining = remR._1
-    var nRemaining = remR._2
+    // Per-round job ledger: every materialization carries its row count
+    // in the SAME job, so the loop never pays a separate isEmpty/count
+    // action; assigned SCCs accumulate in a driver-side buffer of
+    // already-materialized frames (metadata-sized handles) and union
+    // lazily at the end — the earlier running re-materialized union cost
+    // one extra job per round.
+    var Mat(e, nE, _) = materialize(edges.select(col("src"), col("dst"))
+      .filter(col("src") =!= col("dst")).distinct())
+    var Mat(remaining, nRemaining, _) = materialize(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
     val assignedParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var outer = 0
     withLoopShuffle(edges.sparkSession, nE) {
@@ -1184,7 +1019,7 @@ object Components {
       var trimRounds = 0
       // r14 adjudication of "check trim convergence every K rounds":
       // structurally a NO-OP at the job level — the convergence check IS
-      // the matSummed count, computed inside each layer's materializing
+      // the materialized count, computed inside each layer's materializing
       // job (no separate driver action exists to elide), so checking
       // less often removes zero jobs; the only shape that does reduce
       // jobs (K layers per materialization) is the twice-measured
@@ -1204,76 +1039,57 @@ object Components {
       // more than the saved job scheduling. Don't re-fuse.
       while (trimming && trimRounds < maxInner) {
         trimRounds += 1
-        val (ne, n2, _) = matSummed(
-          e.join(bcIfSmall(e.select(col("dst").as("src")).distinct(), nE),
-              Seq("src"), "left_semi")
-            .join(bcIfSmall(e.select(col("src").as("dst")).distinct(), nE),
-              Seq("dst"), "left_semi"), -1)
-        if (n2 == nE) { trimming = false; unmat(ne) }
-        else { unmat(e); e = ne; nE = n2 }
-        if (sys.env.contains("GRAFT_SCC_DEBUG"))
-          System.err.println(s"[scc-trim] round $trimRounds edges=$nE" +
-            s" t=${System.nanoTime() / 1000000L % 100000000}")
+        val Mat(ne, n2, _) = materialize(
+          e.join(e.select(col("dst").as("src")).distinct(), Seq("src"), "left_semi")
+            .join(e.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi"))
+        if (n2 == nE) { trimming = false; release(ne) }
+        else { release(e); e = ne; nE = n2 }
       }
       // core = endpoints of the trimmed edge set ⊆ remaining; everything
       // outside it is a singleton SCC
-      val (core, nCore, _) = matSummed(e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct(), -1)
+      val Mat(core, nCore, _) = materialize(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct())
       if (nCore < nRemaining) {
-        val (single, _, _) = matSummed(
-          remaining.join(bcIfSmall(core, nCore), Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("c")), -1)
+        val single = materialize(remaining.join(core, Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("c"))).df
         assignedParts += single // forced `single` → old remaining done
-        unmat(remaining)
+        release(remaining)
         remaining = core
         nRemaining = nCore
-      } else unmat(core)
+      } else release(core)
       if (nRemaining > 0) {
         // Phase 1: forward max-ancestor coloring.
         val fwd = colorToFixpoint(remaining, e, maxInner)
         // Phase 2: reverse coloring on class-restricted reversed edges.
-        val ec = e
-          .join(bcIfSmall(
-              fwd.select(col("id").as("src"), col("c").as("cs")),
-              nRemaining), Seq("src"))
-          .join(bcIfSmall(
-              fwd.select(col("id").as("dst"), col("c").as("cd")),
-              nRemaining), Seq("dst"))
+        val ec = materialize(e
+          .join(fwd.select(col("id").as("src"), col("c").as("cs")), Seq("src"))
+          .join(fwd.select(col("id").as("dst"), col("c").as("cd")), Seq("dst"))
           .filter(col("cs") === col("cd"))
-          .select(col("dst").as("src"), col("src").as("dst"))
-          .transform(mat)
+          .select(col("dst").as("src"), col("src").as("dst"))).df
         val rev = colorToFixpoint(remaining, ec, maxInner)
-        val (found, nFound, _) = matSummed(fwd
-          .join(bcIfSmall(
-              rev.select(col("id"), col("c").as("rc")), nRemaining),
-            Seq("id"))
+        val found = materialize(fwd
+          .join(rev.select(col("id"), col("c").as("rc")), Seq("id"))
           .filter(col("c") === col("rc"))
-          .select(col("id"), col("c")), -1)
-        assignedParts += found // buffered: do NOT unmat
-        val (nr, nRem, _) = matSummed(remaining.join(
-          bcIfSmall(found.select("id"), nFound),
-          Seq("id"), "left_anti"), -1)
-        unmat(remaining)
+          .select(col("id"), col("c"))).df
+        assignedParts += found // buffered: do NOT release
+        val Mat(nr, nRem, _) = materialize(
+          remaining.join(found.select("id"), Seq("id"), "left_anti"))
+        release(remaining)
         remaining = nr
         nRemaining = nRem
-        val (ne, nE2, _) = matSummed(
-          e.join(bcIfSmall(found.select(col("id").as("src")), nFound),
-              Seq("src"), "left_anti")
-            .join(bcIfSmall(found.select(col("id").as("dst")), nFound),
-              Seq("dst"), "left_anti")
-            .select("src", "dst"), -1)
-        unmat(e)
+        val Mat(ne, nE2, _) = materialize(
+          e.join(found.select(col("id").as("src")), Seq("src"), "left_anti")
+            .join(found.select(col("id").as("dst")), Seq("dst"), "left_anti")
+            .select("src", "dst"))
+        release(e)
         e = ne
         nE = nE2
-        if (sys.env.contains("GRAFT_SCC_DEBUG"))
-          System.err.println(s"[scc] outer $outer found=$nFound" +
-            s" left=$nRemaining")
-        unmat(fwd); unmat(ec); unmat(rev)
+        release(fwd); release(ec); release(rev)
       }
     }
     }
     require(nRemaining == 0, s"SCC did not finish in $maxOuter rounds")
-    unmat(e); unmat(remaining) // the returned plan reads only `assigned`
+    release(e); release(remaining) // the returned plan reads only `assigned`
     if (assignedParts.isEmpty)
       return edges.sparkSession.range(0)
         .select(col("id").as("c"), col("id"))
@@ -1309,9 +1125,8 @@ object Components {
     val e = edges.select(col("src").cast("long").as("esrc"),
       col("dst").cast("long").as("edst"))
       .withColumn("eh", xxhash64(col("esrc"), col("edst")))
-    var cur = e.select(col("esrc").as("start")).distinct()
-      .withColumn("node", col("start"))
-      .localCheckpoint(true) // frontier: one row per walk
+    var cur = materialize(e.select(col("esrc").as("start")).distinct()
+      .withColumn("node", col("start"))).df // frontier: one row per walk
     var out = cur.withColumn("step", lit(0))
     for (t <- 1 to steps) {
       // xxhash64(lit) is foldable — the per-step constant costs nothing
@@ -1321,7 +1136,7 @@ object Components {
             col("edst").as("dst")).as("hd"))
         .groupBy("start").agg(min(col("hd")).as("m"))
         .select(col("start"), col("m.dst").as("node"))
-      cur = next.localCheckpoint(true)
+      cur = materialize(next).df
       out = out.union(cur.withColumn("step", lit(t)))
     }
     out
@@ -1350,20 +1165,18 @@ object Components {
       col("dst").cast("long").as("edst"))
     val pivots = e.select(col("esrc").as("pivot")).distinct()
       .orderBy("pivot").limit(nPivots)
-    var front = pivots.select(col("pivot"), col("pivot").as("node"))
-      .withColumn("sig", lit(1L)).localCheckpoint(true)
-    var visited = front.select("pivot", "node").localCheckpoint(true)
+    var front = materialize(pivots.select(col("pivot"), col("pivot").as("node"))
+      .withColumn("sig", lit(1L))).df
+    var visited = materialize(front.select("pivot", "node")).df
     var levels = Vector(front)
     for (_ <- 1 to depth) {
-      val next = front.join(e, col("node") === col("esrc"))
+      val next = materialize(front.join(e, col("node") === col("esrc"))
         .groupBy(col("pivot"), col("edst").as("nnode"))
         .agg(sum(col("sig")).as("sig"))
         .join(visited.withColumnRenamed("node", "nnode"),
           Seq("pivot", "nnode"), "left_anti")
-        .withColumnRenamed("nnode", "node")
-        .localCheckpoint(true)
-      visited = visited.union(next.select("pivot", "node"))
-        .localCheckpoint(true)
+        .withColumnRenamed("nnode", "node")).df
+      visited = materialize(visited.union(next.select("pivot", "node"))).df
       levels :+= next
       front = next
     }
@@ -1376,14 +1189,13 @@ object Components {
           .na.fill(0L, Seq("delta")))
         .select(col("pivot").as("wpivot"), col("node").as("wnode"),
           col("sig").as("wsig"), col("delta"))
-      val d = levels(k).join(e, col("node") === col("esrc"))
+      val d = materialize(levels(k).join(e, col("node") === col("esrc"))
         .join(wd, col("pivot") === col("wpivot") &&
           col("edst") === col("wnode"))
         .groupBy("pivot", "node")
         .agg(sum(expr(
           s"(CAST(sig AS DECIMAL(38,0)) * (${scale}L + delta)) div wsig"))
-          .as("delta"))
-        .localCheckpoint(true)
+          .as("delta"))).df
       acc = if (acc == null) d else acc.union(d)
       deltaNext = d
     }

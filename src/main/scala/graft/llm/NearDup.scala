@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlBridge.materialize
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection: exact n-gram Jaccard, MinHash+LSH, SimHash.
@@ -480,13 +481,15 @@ object NearDup {
     // shuffled were ~5x the bytes at the hot-bucket candidate volumes
     // sequential-id name spaces produce. Strings re-attach (dictionary-
     // sized broadcast joins) only for the exact verify, reoriented so
-    // name_a < name_b as before.
-    val names = org.apache.spark.sql.GraftSqlBridge.materializeTruncated(
+    // name_a < name_b as before. The key relation is materialized too:
+    // the planner estimates an explode at its input's size, ~C(|s|,2)
+    // times too small here, and would broadcast the self-join's side on
+    // that estimate; exact statistics decide it on the real size.
+    val names = materialize(
       df.select(col(strCol).as("name")).na.drop().distinct()
-        .withColumn("nid", monotonically_increasing_id()))
-    val keyed = names.select(col("nid"), col("name"),
-        explode(deletionKeys2(col("name"))).as("key"))
-      .select(col("nid"), col("key"))
+        .withColumn("nid", monotonically_increasing_id())).df
+    val keyed = materialize(names.select(col("nid"),
+      explode(deletionKeys2(col("name"))).as("key"))).df
     val candIds = keyed.as("a").join(keyed.as("b"),
         col("a.key") === col("b.key") && col("a.nid") < col("b.nid"))
       .select(col("a.nid").as("na"), col("b.nid").as("nb"))

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlBridge.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -636,16 +637,14 @@ object Similarity {
     // so the tie order is total and the argmax identical) and
     // n_members via count in the SAME aggregate consumes it once: the
     // whole tail is a single partial-agg exchange. The cc side is one
-    // row per endpoint (≤ 2·|confirmed|, an exact count the checkpoint
-    // makes cheap), so [[Components.bcIfSmall]] broadcasts the label
-    // attach and the corpus never shuffles by vec_id at all; at corpus
-    // scale the gate fails and the join keeps its shuffle plan.
-    val nPairs = confirmed.count()
+    // row per endpoint, materialized so its exact statistics let the
+    // planner broadcast the label attach: the corpus never shuffles by
+    // vec_id at all, and at corpus scale the planner keeps the shuffle.
+    val labels = materialize(
+      cc.select(col("id").as("vec_id"), col("component"))).df
     val clustered = base
       .select(col("vec_id"), dotD(col("embedding"), col("embedding")).as("n2"))
-      .join(Components.bcIfSmall(
-          cc.select(col("id").as("vec_id"), col("component")), 2L * nPairs),
-        Seq("vec_id"), "left")
+      .join(labels, Seq("vec_id"), "left")
       .withColumn("cluster_id", coalesce(col("component"), col("vec_id")))
     clustered.groupBy("cluster_id")
       .agg(max_by(col("vec_id"), struct(col("n2"), (-col("vec_id"))
@@ -690,19 +689,19 @@ object Similarity {
       .select(transform(col("__nrm"), x => x.getField("n2")).as("nrm"))
     // fold the per-vector reconstructed norm² in at code-assignment
     // time: the pair join then never needs the norm table per side
-    // Materialized ONCE (stats-truncated): both sides of the pair
+    // Materialized ONCE (exact stats): both sides of the pair
     // self-join read the same (vec_id, cell, codes, rn2) blocks —
     // without this the entire training+assignment lineage (centroid
     // aggregation, k-means codebooks, code argmax) executes twice,
     // once per join side. This is also the relation a 100 TB run
     // persists as its PQ index.
-    val codedN = org.apache.spark.sql.GraftSqlBridge.materializeTruncated(
+    val codedN = materialize(
       coded.crossJoin(broadcast(nrmArr))
         .select(col("vec_id"), col("cell"), col("codes"),
           (0 until m).foldLeft(lit(0.0)) { (acc, s) =>
             acc + element_at(col("nrm"),
               lit(s * kCodes) + element_at(col("codes"), s + 1) + 1)
-          }.as("rn2")))
+          }.as("rn2"))).df
     val approxDot = (0 until m).foldLeft(lit(0.0)) { (acc, s) =>
       acc + element_at(col("sdc"),
         lit(s * kCodes * kCodes) +
@@ -1200,30 +1199,28 @@ object Similarity {
         Seq("j"))
       .select(col("i"), col("j"),
         (col("n") * col("pS") - col("si") * col("sj")).as("c"))
-    // r14 OPT (the r13 BSP-loop discipline applied to the power rounds —
-    // guide §3.1/§2): the matrix relation has EXACTLY d² rows, a count
-    // the materializing job returns for free; the iterate v (d rows, a
-    // stats-less checkpoint the planner could only SortMergeJoin) gets
-    // [[Components.bcIfSmall]]'s broadcast hint with d² as its
-    // conservative bound, and the d²-row rounds run under
+    // The matrix relation has EXACTLY d² rows, a count the materializing
+    // job returns for free, and the d²-row rounds run under
     // [[Components.withLoopShuffle]] so each tiny aggregate schedules a
-    // state-sized task wave instead of a session-width one. At corpus
-    // dimensionality (d² beyond the broadcast threshold / 50k-row
-    // partitions) both gates return the session defaults.
-    val mR = org.apache.spark.sql.GraftSqlBridge.materializeTruncatedSummed(
+    // state-sized task wave instead of a session-width one. The iterate v
+    // (d rows) is materialized each round, so its exact statistics let
+    // the planner broadcast it into the matrix join; a plain checkpoint
+    // would carry the join's product estimate instead. At corpus
+    // dimensionality the planner and the loop sizing return the session
+    // defaults.
+    val mR = materialize(
       upper.unionByName(upper.filter(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("c"))), -1)
-    val m = mR._1 // d² rows, reused every round
-    val d2 = mR._2
+        .select(col("j").as("i"), col("i").as("j"), col("c"))))
+    val m = mR.df // d² rows, reused every round
+    val d2 = mR.rows
     var v = m.select(col("j")).distinct()
       .select(col("j"), lit(1000000000L).cast("decimal(38,0)").as("x"))
     Components.withLoopShuffle(df.sparkSession, d2) {
     for (_ <- 1 to rounds) {
-      val w = m.join(Components.bcIfSmall(v, d2), Seq("j"))
+      val w = m.join(v, Seq("j"))
         .groupBy(col("i")).agg(sum(col("c") * col("x")).as("w"))
       val mx = w.agg(max(abs(col("w"))).as("mx"))
-      v = w.crossJoin(broadcast(mx))
-        .select(col("i").as("j"), expr(
+      v = materialize(w.crossJoin(broadcast(mx)).select(col("i").as("j"), expr(
           """CAST(CASE WHEN w >= 0
                THEN (w - w % (CAST((mx - mx % 1000000000) / 1000000000
                  AS DECIMAL(38,0)) + 1))
@@ -1233,8 +1230,7 @@ object Similarity {
                  / 1000000000 AS DECIMAL(38,0)) + 1))
                  / (CAST((mx - mx % 1000000000) / 1000000000
                  AS DECIMAL(38,0)) + 1))
-             END AS DECIMAL(38,0)) AS x"""))
-        .localCheckpoint(true)
+             END AS DECIMAL(38,0)) AS x"""))).df
     }
     }
     val m2 = v.agg(max(abs(col("x"))).as("m2"))

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * windows, never unbounded accumulation.
   */
 object Streams {
-  private val inputCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val inputCounts = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long, String), java.lang.Long]()
 
   /** The state partition count for a fresh-checkpoint micro-batch
     * execution over `inputParquet`: ~50k input rows per state partition,
@@ -30,10 +30,14 @@ object Streams {
     * operator, one RocksDB instance each under transformWithState) every
     * micro-batch, which dominates the run (q135 at sf0.1: 5.9s → 2.2s).
     * Results are partition-count-independent. The input's row count is
-    * memoized per path. */
+    * memoized by (path, length, mtime, [[graft.FileSig.contentTag]]), the
+    * key `Tables` resolves by, so a rewritten input is counted again. */
   def sizedPartitions(spark: SparkSession, inputParquet: String): Int = {
-    val rows: Long = inputCounts.computeIfAbsent(inputParquet,
-      p => spark.read.parquet(p).count())
+    val f = new java.io.File(inputParquet)
+    val key = (inputParquet, f.length(), f.lastModified(),
+      graft.FileSig.contentTag(f))
+    val rows: Long = inputCounts.computeIfAbsent(key,
+      k => spark.read.parquet(k._1).count())
     val cap = spark.conf.get(ShufflePartitions).toLong
     math.max(1L, math.min(cap, rows / 50000L + 1)).toInt
   }

@@ -2,29 +2,38 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into `private[sql] Dataset.ofRows` — the standard technique Spark
+/** Bridge into `private[sql]` Spark API — the standard technique Spark
   * extension libraries use to materialize a DataFrame from a custom logical
-  * plan node (the public Dataset API has no entry point for injected plans).
-  * Kept to this single call on purpose. */
+  * plan node (the public Dataset API has no entry point for injected plans):
+  * `Dataset.ofRows`, the plan's explain text, and [[materialize]], the
+  * loop-state primitive that builds a `LogicalRDD` with exact statistics. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Eager materialization that TRUNCATES both RDD lineage and plan
-    * statistics — the iterative-algorithm alternative to
-    * `Dataset.localCheckpoint`. The Dataset version rewrites the origin
-    * plan's Statistics into the new LogicalRDD; under an iterated
-    * SELF-join (e.g. pointer jumping) the estimated sizeInBytes SQUARES
-    * every round, so by round ~15 the stats BigInt has megabits and
-    * every downstream stats visit burns CPU in BigInteger multiplies
-    * (observed: per-round wall time tripling at a few hundred rows,
-    * 100% of samples in SizeInBytesOnlyStatsPlanVisitor →
-    * BigInteger.multiplyToomCook3). Rebuilding from the raw RDD gives
-    * the LogicalRDD default statistics instead, which also means the
-    * result is never auto-broadcast — correct for BSP loop state.
+  /** Eager materialization of BSP loop state (and of any frame read more
+    * than once downstream) with EXACT statistics: the one way the graph
+    * loops materialize a round. A single job copies `df`'s rows into
+    * local-checkpointed blocks, truncating lineage, and returns in the
+    * same job the exact row count and, when `sumCol >= 0`, the exact Σ of
+    * that LONG column — the loops' (count, sum) convergence checksum,
+    * which a separate aggregate action per round would cost a second job
+    * for (the q372 SCC runs ~70 rounds).
     *
-    * r13 OPT negative (measured, do not re-try): rebuilding with the
-    * executed plan's outputPartitioning/outputOrdering preserved (what
+    * The result is a `LogicalRDD` whose statistics are the measured
+    * `rows × getSizePerRow(output)` bytes and `rows` rows, so
+    * `JoinSelection` makes every broadcast decision on materialized
+    * state from the session's own `autoBroadcastJoinThreshold` — no
+    * hints. `Dataset.localCheckpoint` instead copies the origin plan's
+    * ESTIMATE, and under an iterated self-join (pointer jumping) that
+    * estimate squares every round: by round ~15 the BigInt has megabits
+    * and every stats visit burns CPU in BigInteger multiplies (observed:
+    * per-round wall time tripling at a few hundred rows). Exact stats are
+    * re-measured each round and cannot compound.
+    *
+    * Output partitioning stays UNKNOWN on purpose. r13 OPT negative
+    * (measured, do not re-try): rebuilding with the executed plan's
+    * outputPartitioning/outputOrdering preserved (what
     * `LogicalRDD.fromDataset` does) to skip the next round's Exchange.
     * A synthetic pointer-jump probe won −15%/round, but the real BSP
     * family A/B (12 queries, 2 cold legs/side, interleaved, sf0.1,
@@ -39,28 +48,15 @@ object GraftSqlBridge {
     * OUT of the loop, so EnsureRequirements co-partitions the downstream
     * corpus-sized join side down to 1-4 tasks instead of re-exchanging
     * at session width (q316/q88's label join). Unknown partitioning on
-    * materialized loop state is load-bearing, not an accident. */
-  def materializeTruncated(df: DataFrame): DataFrame = {
+    * materialized loop state is load-bearing, not an accident.
+    *
+    * The sum is exact: values span the full LONG range (xxhash
+    * checksums), so per-partition long chunks spill into a BigInteger on
+    * two's-complement overflow. */
+  def materialize(df: DataFrame, sumCol: Int = -1): Mat = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    rdd.count()
-    spark.internalCreateDataFrame(rdd, ds.schema, isStreaming = false)
-  }
-
-  /** [[materializeTruncated]] plus (row count, exact Σ of one LONG
-    * column) computed IN the materializing job: the BSP loops here use
-    * (count, sum) as their convergence checksum, and paying a separate
-    * aggregate job per round doubles the per-round fixed cost (the q372
-    * SCC runs ~70 rounds). `sumCol` is an ordinal into the schema; pass
-    * -1 to skip the sum (count-only). The sum is exact — per-partition
-    * long chunks spill into a BigInteger well before overflow. */
-  def materializeTruncatedSummed(df: DataFrame, sumCol: Int):
-      (DataFrame, Long, java.math.BigDecimal) = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val spark = ds.sparkSession
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
+    val rdd = ds.queryExecution.toRdd.map(_.copy()).setName(MatName)
     rdd.localCheckpoint()
     val parts = rdd.mapPartitions { it =>
       var n = 0L
@@ -72,12 +68,9 @@ object GraftSqlBridge {
         if (sumCol >= 0 && !row.isNullAt(sumCol)) {
           val v = row.getLong(sumCol)
           val nc = chunk + v
-          // two's-complement overflow test: same-sign operands, result
-          // sign flipped. Values span the FULL long range (xxhash
-          // checksums), so a threshold check is not enough — the add
-          // itself can wrap mod 2^64 and silently corrupt the checksum
-          // (observed: convergence never detected, loops ran to
-          // maxIters). On overflow, bank the chunk and restart from v.
+          // same-sign operands, result sign flipped: the add wrapped mod
+          // 2^64 (observed: a wrapped checksum never converged, loops ran
+          // to maxIters) — bank the chunk and restart from v
           if (((chunk ^ nc) & (v ^ nc)) < 0) {
             big = big.add(java.math.BigInteger.valueOf(chunk)); chunk = v
           } else chunk = nc
@@ -87,8 +80,37 @@ object GraftSqlBridge {
     }.collect()
     val n = parts.map(_._1).sum
     val s = parts.foldLeft(java.math.BigInteger.ZERO)((a, p) => a.add(p._2))
-    (spark.internalCreateDataFrame(rdd, ds.schema, isStreaming = false),
-      n, new java.math.BigDecimal(s))
+    val output = org.apache.spark.sql.catalyst.types.DataTypeUtils
+      .toAttributes(ds.schema)
+    val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
+      sizeInBytes = org.apache.spark.sql.catalyst.plans.logical
+        .statsEstimation.EstimationUtils.getSizePerRow(output) * n,
+      rowCount = Some(BigInt(n)))
+    val plan = org.apache.spark.sql.execution.LogicalRDD(output, rdd)(
+      spark, originStats = Some(stats))
+    Mat(classic.Dataset.ofRows(spark, plan), n, new java.math.BigDecimal(s))
+  }
+
+  /** Drop the blocks [[materialize]] pinned for `df`; a no-op on null and
+    * on any other frame. `Dataset.unpersist` does not reach them, because the
+    * RDD is never registered with the Dataset cache manager. Call it only
+    * once every consumer of `df` — including the next round's
+    * materialization — has executed: lineage is truncated, so a dropped
+    * block cannot be recomputed. */
+  def release(df: DataFrame): Unit =
+    if (df != null)
+      df.asInstanceOf[classic.Dataset[Row]].queryExecution.logical match {
+        case l: org.apache.spark.sql.execution.LogicalRDD
+            if l.rdd.name == MatName => l.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
+
+  private val MatName = "graft.materialize"
+
+  /** A frame materialized by [[materialize]]: its exact row count and the
+    * in-job Σ of the summed column (zero when none). */
+  final case class Mat(df: DataFrame, rows: Long, sum: java.math.BigDecimal) {
+    def release(): Unit = GraftSqlBridge.release(df)
   }
 
   /** The `EXPLAIN <mode>` text of `df`'s plan as a string (the Dataset
@@ -97,29 +119,4 @@ object GraftSqlBridge {
   def explainString(df: DataFrame, mode: String): String =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString(mode))
-
-  /** Release the BlockManager blocks pinned by [[materializeTruncated]]
-    * for `df` (no-op on any other DataFrame — `Dataset.unpersist` does
-    * NOT reach these blocks, because the RDD persisted inside
-    * `materializeTruncated` is never registered with the Dataset cache
-    * manager). MUST only be called once every consumer of `df` —
-    * including the NEXT round's `materializeTruncated`, whose `count()`
-    * forces its own blocks — has executed: the localCheckpoint
-    * truncated lineage, so a dropped block cannot be recomputed.
-    * Without this, a many-round BSP loop (SCC: up to 25×~60 rounds)
-    * pins every round's full edge relation for the session lifetime. */
-  def unpersistMaterialized(df: DataFrame): Unit =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** The session's `autoBroadcastJoinThreshold` in bytes, via SQLConf's
-    * own typed accessor — which, unlike re-parsing the string value,
-    * accepts both size strings ("10MB") and the documented plain `-1`
-    * that disables auto-broadcast. */
-  def autoBroadcastThreshold(spark: SparkSession): Long =
-    spark.asInstanceOf[classic.SparkSession]
-      .sessionState.conf.autoBroadcastJoinThreshold
 }

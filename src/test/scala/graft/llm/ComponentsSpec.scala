@@ -697,33 +697,30 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
-  test("bcIfSmall: loop-state joins broadcast on exact count, shuffle " +
-      "at corpus scale, and respect a disabled threshold") {
-    import org.apache.spark.sql.GraftSqlBridge
-    // Both sides materialized → stats-less LogicalRDDs, the exact shape
-    // of a BSP round: without the hint the planner CANNOT broadcast.
-    val edges = GraftSqlBridge.materializeTruncated(
-      (0L until 100L).map(i => (i, i + 1)).toDF("src", "dst"))
-    val state = GraftSqlBridge.materializeTruncated(
-      (0L until 100L).map(i => (i, i)).toDF("id", "c"))
-    def plan(side: org.apache.spark.sql.DataFrame): String =
-      edges.join(side.withColumnRenamed("id", "src"), Seq("src"))
+  test("materialized loop state: the planner broadcasts on its exact stats") {
+    import org.apache.spark.sql.GraftSqlBridge.materialize
+    // Both sides materialized, the exact shape of a BSP round: no hint,
+    // the broadcast decision is JoinSelection's own.
+    val edges = materialize(
+      (0L until 100L).map(i => (i, i + 1)).toDF("src", "dst")).df
+    val state = materialize(
+      (0L until 100L).map(i => (i, i)).toDF("id", "c")).df
+    def plan(): String =
+      edges.join(state.withColumnRenamed("id", "src"), Seq("src"))
         .queryExecution.executedPlan.toString
-    assert(!plan(state).contains("BroadcastHashJoin"),
-      "stats-less baseline must not auto-broadcast")
-    // Exact count under the session threshold → BroadcastHashJoin.
-    assert(plan(Components.bcIfSmall(state, 100L))
-      .contains("BroadcastHashJoin"))
-    // Corpus-scale count → the hint must NOT fire (shuffle plan kept).
-    assert(!plan(Components.bcIfSmall(state, 10L * 1000 * 1000 * 1000))
-      .contains("BroadcastHashJoin"))
-    // autoBroadcastJoinThreshold = -1 disables the hint too. The conf
-    // flip is structural (set inside the try, restored in finally) so a
-    // failure anywhere in the block cannot leak the setting into the
-    // shared session.
+    assert(plan().contains("BroadcastHashJoin"))
+    // A threshold below rows × rowBytes → shuffle plan on both sides.
+    val bytes = state.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(bytes == edges.queryExecution.optimizedPlan.stats.sizeInBytes)
+    withConf("spark.sql.autoBroadcastJoinThreshold", (bytes - 1).toString) {
+      assert(!plan().contains("BroadcastHashJoin"))
+    }
+    // autoBroadcastJoinThreshold = -1 disables it too. The conf flip is
+    // structural (set inside the try, restored in finally) so a failure
+    // anywhere in the block cannot leak the setting into the shared
+    // session.
     withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-      assert(!plan(Components.bcIfSmall(state, 100L))
-        .contains("BroadcastHashJoin"))
+      assert(!plan().contains("BroadcastHashJoin"))
     }
   }
 

@@ -24,6 +24,16 @@ class StreamsSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  test("sizedPartitions recounts an input rewritten at the same path") {
+    val path = s"${tmp("sized")}/in.parquet"
+    spark.range(10).write.parquet(path)
+    assert(Streams.sizedPartitions(spark, path) == 1)
+    spark.range(120000).repartition(2).write.mode("overwrite").parquet(path)
+    // ~50k rows per state partition: 120k rows → 3 (under the cap)
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt >= 3)
+    assert(Streams.sizedPartitions(spark, path) == 3)
+  }
+
   test("D1 streaming: dedup within day, survive across days, append on watermark close") {
     val srcDir = tmp("src"); val outDir = tmp("out"); val ckDir = tmp("ck")
     eventsDf(Seq(
