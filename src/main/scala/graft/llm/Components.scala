@@ -46,33 +46,22 @@ object Components {
     val e = materialize(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
-    // Min-propagation only ever lowers labels, so the label sum strictly
-    // decreases until the fixpoint — an exact convergence test computed
-    // INSIDE each round's materializing job, not as a separate aggregate
-    // action per round.
-    var labels = materialize(
-      vertices.select(col("id"), col("id").as("label")), 1)
-    var iter = 0
-    var converged = false
-    withLoopShuffle(edges.sparkSession, math.max(e.rows, labels.rows)) {
-    while (!converged && iter < maxIters) {
-      val nbrMin = e.df
-        .join(labels.df.select(col("id").as("dst"), col("label").as("nl")), "dst")
-        .groupBy(col("src").as("id")).agg(min(col("nl")).as("nbr"))
-      val stepped = labels.df.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-      // Pointer-jumping: follow the label one hop (label <- label(label)).
-      val compressed = stepped
-        .join(stepped.select(col("id").as("label"), col("label").as("ll")),
-          Seq("label"), "left")
-        .select(col("id"), coalesce(col("ll"), col("label")).as("label"))
-      val next = materialize(compressed, 1)
-      labels.release()
-      converged = next.sum.compareTo(labels.sum) == 0
-      labels = next
-      iter += 1
-    }
+    // Min-propagation only ever lowers labels: an unchanged Σ is the fixpoint.
+    val init = materialize(vertices.select(col("id"), col("id").as("label")), 1)
+    val labels = withLoopShuffle(edges.sparkSession, math.max(e.rows, init.rows)) {
+      Bsp(init, maxIters, 1, Bsp.unchanged) { (labels, _) =>
+        val nbrMin = e.df
+          .join(labels.select(col("id").as("dst"), col("label").as("nl")), "dst")
+          .groupBy(col("src").as("id")).agg(min(col("nl")).as("nbr"))
+        val stepped = labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
+        // Pointer-jumping: follow the label one hop (label <- label(label)).
+        stepped
+          .join(stepped.select(col("id").as("label"), col("label").as("ll")),
+            Seq("label"), "left")
+          .select(col("id"), coalesce(col("ll"), col("label")).as("label"))
+      }.state
     }
     e.release() // the returned plan reads only `labels`
     labels.df.select(col("id"), col("label").as("component"))
@@ -123,31 +112,23 @@ object Components {
         .select(col("dst").as("src"), col("m").as("dst"))
         .union(mins.select(col("src"), col("m").as("dst"))))
     }
-    // Edge-set checksum: (count, exact sum of per-edge hashes), computed
-    // INSIDE each round's materializing job (the hash rides as a column)
-    // — exact equality of consecutive rounds detects the fixpoint
-    // without a separate aggregate action per round.
+    // Edge-set checksum: the per-edge hash rides as a column, so a round's
+    // (count, Σ hash) equal to the last round's is the fixpoint.
     def withH(df: DataFrame): DataFrame =
       df.withColumn("__h", xxhash64(col("src"), col("dst")))
-    var e = materialize(withH(canon(edges)), 2)
-    var rounds = 0
-    var converged = e.rows == 0L
-    withLoopShuffle(edges.sparkSession, e.rows) {
-    while (!converged && rounds < maxIters) {
-      val next = materialize(
-        withH(smallStar(largeStar(e.df.select("src", "dst")))), 2)
-      e.release()
-      converged = next.rows == e.rows && next.sum.compareTo(e.sum) == 0
-      e = next
-      rounds += 1
-    }
+    val e0 = materialize(withH(canon(edges)), 2)
+    // an empty edge set is already the fixpoint: no round runs
+    val run = withLoopShuffle(edges.sparkSession, e0.rows) {
+      Bsp(e0, if (e0.rows == 0L) 0 else maxIters, 2, Bsp.unchanged) { (e, _) =>
+        withH(smallStar(largeStar(e.select("src", "dst"))))
+      }
     }
     // At the fixpoint e holds one edge per non-root vertex.
     val labels = vertices
-      .join(e.df.select(col("src").as("id"), col("dst").as("root")),
+      .join(run.state.df.select(col("src").as("id"), col("dst").as("root")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("root"), col("id")).as("component"))
-    (labels, rounds)
+    (labels, run.rounds)
   }
 
   /** Per-node local clustering coefficient — [[triangleCount]]'s
@@ -248,9 +229,8 @@ object Components {
       .union(e.select(col("dst").as("id"))).distinct()).df
     val outdeg = materialize(e.groupBy("src").agg(count(lit(1)).as("deg"))).df
     val tele = (dampDen - dampNum) * scale / dampDen
-    var ranks = vertices.select(col("id"), lit(scale).as("r"))
-    var i = 0
-    while (i < iters) {
+    val ranks = Bsp(Bsp.lazyState(vertices.select(col("id"), lit(scale).as("r"))),
+        iters) { (ranks, _) =>
       // Per-SOURCE contribution first (|V| rows — a vertex-sized join of
       // ranks⋈outdeg), so the edge list is joined exactly ONCE per round;
       // joining ranks and outdeg into the edges separately would run two
@@ -260,14 +240,12 @@ object Components {
         .select(col("src"), expr("r div deg").as("c"))
       val contrib = e.join(perSrc, "src")
         .groupBy(col("dst").as("id")).agg(sum(col("c")).as("s"))
-      val next = materialize(vertices
+      vertices
         .join(contrib, Seq("id"), "left")
         .select(col("id"),
-          (lit(tele) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("r"))).df
-      release(ranks)
-      ranks = next
-      i += 1
-    }
+          (lit(tele) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("r"))
+    }.state.df
+    Bsp.releaseUnread(ranks, e, vertices, outdeg)
     ranks
   }
 
@@ -291,21 +269,18 @@ object Components {
       .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))).df
     val outdeg = materialize(e.groupBy("src").agg(count(lit(1)).as("deg"))).df
     val tele = (dampDen - dampNum) * scale / dampDen
-    var ranks = v.select(col("id"), (col("is_seed") * scale).as("r"))
-    var i = 0
-    while (i < iters) {
+    val ranks = Bsp(Bsp.lazyState(v.select(col("id"), (col("is_seed") * scale).as("r"))),
+        iters) { (ranks, _) =>
       val perSrc = ranks.withColumnRenamed("id", "src")
         .join(outdeg, "src")
         .select(col("src"), expr("r div deg").as("c"))
       val contrib = e.join(perSrc, "src")
         .groupBy(col("dst").as("id")).agg(sum(col("c")).as("s"))
-      val next = materialize(v.join(contrib, Seq("id"), "left")
+      v.join(contrib, Seq("id"), "left")
         .select(col("id"), (col("is_seed") * tele +
-          expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("r"))).df
-      release(ranks)
-      ranks = next
-      i += 1
-    }
+          expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("r"))
+    }.state.df
+    Bsp.releaseUnread(ranks, e, v, outdeg)
     ranks
   }
 
@@ -364,6 +339,7 @@ object Components {
     var levels = List(frontier.df)
     var prev: DataFrame = null
     var depth = 0
+    // Hand-written: the result reads every level; no state is superseded.
     while (depth < maxDepth && frontier.rows > 0) {
       depth += 1
       val cur = frontier.df
@@ -415,6 +391,7 @@ object Components {
     var levels = List(frontier.df)
     var prev: DataFrame = null
     var depth = 0
+    // Hand-written: the result reads every level; no state is superseded.
     while (depth < maxDepth && frontier.rows > 0) {
       depth += 1
       val cur = frontier.df
@@ -485,6 +462,7 @@ object Components {
     // flips to shuffle — the scale-adaptive posture.
     var matched: DataFrame = null
     var out: DataFrame = null
+    // Hand-written: keeps every round's matches, skips the last matched-set job.
     withLoopShuffle(spark, n0) {
       for (r <- 1 to rounds) {
         val live = if (matched == null) e0
@@ -546,60 +524,30 @@ object Components {
     val e = materialize(
       if (uniqueEdges) edges.select("src", "dst", "w")
       else edges.groupBy("src", "dst").agg(min(col("w")).as("w"))).df
-    var dist = materialize(Seq((src, 0L)).toDF("node", "dist")).df
-    var frontier = dist
-    // The frontier size is exact and free: __improved rides the merge as
-    // a LONG so the materializing job's in-job sum returns it (replacing
-    // a separate per-round isEmpty action).
-    var nFrontier = 1L
-    var prevMerged: DataFrame = null
-    var round = 0
-    while (round < rounds && nFrontier > 0) {
-      round += 1
+    // The state is the merged (node, dist, __improved) frame; the frontier
+    // and `dist` are its projections. __improved rides as a LONG, so the
+    // round's in-job Σ is the frontier size (no per-round isEmpty action).
+    val seed = materialize(Seq((src, 0L, 1L)).toDF("node", "dist", "__improved"), 2)
+    val merged = Bsp(seed, rounds, 2, Bsp.until(_.sum.signum == 0)) { (merged, _) =>
+      val frontier = merged.filter(col("__improved") === 1L).select("node", "dist")
       val relax = frontier
         .join(e, frontier("node") === e("src"))
         .select(e("dst").as("node"),
           (frontier("dist") + e("w")).as("dist"))
         .groupBy("node").agg(min("dist").as("dist"))
-      val merged = materialize(dist.as("d")
+      merged.select("node", "dist").as("d")
         .join(relax.as("r"), Seq("node"), "full_outer")
         .select(col("node"),
           least(coalesce(col("d.dist"), lit(Long.MaxValue)),
             coalesce(col("r.dist"), lit(Long.MaxValue))).as("dist"),
           (col("d.dist").isNull ||
             (col("r.dist").isNotNull && col("r.dist") < col("d.dist")))
-            .cast("long").as("__improved")), 2)
-      release(prevMerged)
-      prevMerged = merged.df
-      nFrontier = merged.sum.longValue()
-      frontier = merged.df.filter(col("__improved") === 1L)
-        .select("node", "dist")
-      dist = merged.df.select("node", "dist")
-    }
-    dist
+            .cast("long").as("__improved"))
+    }.state
+    release(e) // every state is materialized: the result never reads `e`
+    merged.df.select("node", "dist")
   }
 
-  /** k-core decomposition by synchronous iterative peeling: each round
-    * drops every vertex whose degree within the current subgraph is < k,
-    * until a fixpoint (the k-core) or `maxRounds`. The standard corpus/
-    * graph-mining density filter (cohesive-subgraph extraction, spam/hub
-    * pruning before community detection).
-    *
-    * Semantics are the synchronous peel — alive(r+1) = {v in alive(r) :
-    * deg_alive(r)(v) >= k} — so a bounded-round replay (the q211/BPE
-    * unrolled-CTE discipline) reproduces it exactly; peeling is monotone,
-    * so rounds past the fixpoint are no-ops and an early exit is safe.
-    *
-    * 100 TB posture: each round is one degree aggregation plus two
-    * edge⋈alive semi joins — everything shuffled on vertex ids, two longs
-    * per edge, nothing vertex- or edge-sized on the driver (the
-    * convergence probe is the CC/SSSP (count, hash-sum) checksum,
-    * computed in each round's materializing job). Lineage stays flat via
-    * per-round materialization.
-    *
-    * @param edges (src, dst) pairs; symmetrized and de-duplicated here
-    * @return surviving (node, core_deg) — degree within the k-core
-    */
   /** Luby-style maximal independent set over an undirected edge list,
     * DETERMINISTIC: vertex priority is the total order
     * (xxhash64(id), id), so every engine replays the exact same MIS.
@@ -640,6 +588,7 @@ object Components {
     val misParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var r = 0
     var done = false
+    // Hand-written: two states a round, keeps winners, skips the last edge job.
     while (r < rounds && !done) {
       r += 1
       val nbrMin = e
@@ -694,28 +643,44 @@ object Components {
     misParts.reduce(_ union _).select(col("v").as("node"), col("mis_round"))
   }
 
+  /** k-core decomposition by synchronous iterative peeling: each round
+    * drops every vertex whose degree within the current subgraph is < k,
+    * until a fixpoint (the k-core) or `maxRounds`. The standard corpus/
+    * graph-mining density filter (cohesive-subgraph extraction, spam/hub
+    * pruning before community detection).
+    *
+    * Semantics are the synchronous peel — alive(r+1) = {v in alive(r) :
+    * deg_alive(r)(v) >= k} — so a bounded-round replay (the q211/BPE
+    * unrolled-CTE discipline) reproduces it exactly; peeling is monotone,
+    * so rounds past the fixpoint are no-ops and an early exit is safe.
+    *
+    * 100 TB posture: each round is one degree aggregation plus two
+    * edge⋈alive semi joins — everything shuffled on vertex ids, two longs
+    * per edge, nothing vertex- or edge-sized on the driver (the
+    * convergence probe is the CC/SSSP (count, hash-sum) checksum,
+    * computed in each round's materializing job). Lineage stays flat via
+    * per-round materialization.
+    *
+    * @param edges (src, dst) pairs; symmetrized and de-duplicated here
+    * @return surviving (node, core_deg) — degree within the k-core
+    */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30): DataFrame = {
     def withH(df: DataFrame): DataFrame =
       df.withColumn("__h", xxhash64(col("src"), col("dst")))
-    var e = materialize(withH(edges.select(col("src"), col("dst"))
+    val e0 = materialize(withH(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()), 2)
-    var rounds = 0
-    var converged = e.rows == 0L
-    while (!converged && rounds < maxRounds) {
-      val cur = e.df.select("src", "dst")
+    // an empty edge set is already the fixpoint: no round runs
+    val e = Bsp(e0, if (e0.rows == 0L) 0 else maxRounds, 2, Bsp.unchanged) { (e, _) =>
+      val cur = e.select("src", "dst")
       val alive = cur.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("v"))
-      val next = materialize(withH(cur
+      withH(cur
         .join(alive.select(col("v").as("src")), Seq("src"), "left_semi")
         .join(alive.select(col("v").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")), 2)
-      e.release()
-      converged = next.rows == e.rows && next.sum.compareTo(e.sum) == 0
-      e = next
-      rounds += 1
-    }
-    e.df.groupBy("src").agg(count(lit(1)).as("core_deg"))
+        .select("src", "dst"))
+    }.state.df
+    e.groupBy("src").agg(count(lit(1)).as("core_deg"))
       .select(col("src").as("node"), col("core_deg"))
   }
 
@@ -738,13 +703,14 @@ object Components {
     */
   def kTruss(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
+    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val thr = k - 2
-    var e = materialize(edges
+    val e0 = materialize(edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()).df
-    var out = e.select(col("u"), col("v"), lit(0L).as("support")).limit(0)
-    for (_ <- 1 to rounds) {
+      .filter(col("u") =!= col("v")).distinct())
+    Bsp(e0, rounds) { (surviving, _) =>
+      val e = surviving.select("u", "v")
       val tri = e.select(col("u").as("a"), col("v").as("b"))
         .join(e.select(col("u").as("b2"), col("v").as("c")),
           col("b") === col("b2"))
@@ -755,13 +721,8 @@ object Components {
         .union(tri.select(col("b").as("u"), col("c").as("v")))
         .union(tri.select(col("a").as("u"), col("c").as("v")))
         .groupBy("u", "v").agg(count(lit(1)).as("support"))
-      val prev = out
-      out = materialize(sup.filter(col("support") >= thr)).df
-      release(e)
-      release(prev)
-      e = out.select("u", "v")
-    }
-    out
+      sup.filter(col("support") >= thr)
+    }.state.df
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) for `rounds`
@@ -783,19 +744,16 @@ object Components {
     val ue = materialize(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()).df
-    var lab = materialize(ue.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))).df
-    for (_ <- 1 to rounds) {
-      val next = materialize(ue
-        .join(lab.withColumnRenamed("node", "dst"), Seq("dst"))
+    val lab = Bsp(materialize(ue.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label"))), rounds) { (lab, _) =>
+      ue.join(lab.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("src"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-        .select(col("src").as("node"), (-col("m.nl")).as("label"))).df
-      release(lab)
-      lab = next
-    }
+        .select(col("src").as("node"), (-col("m.nl")).as("label"))
+    }.state.df
+    release(ue) // every state is materialized: the result never reads `ue`
     lab
   }
 
@@ -823,16 +781,13 @@ object Components {
     // The doubling state is |V| rows EXACTLY, every round (p is a total
     // function); exact statistics keep the self-join's estimate from
     // squaring round over round.
-    var df = materialize(
-      succ.select(col("id"), col("p"), col("id").as("mn"))).df
-    for (_ <- 1 to rounds) {
-      val next = materialize(df.as("a")
+    val df = Bsp(materialize(
+        succ.select(col("id"), col("p"), col("id").as("mn"))), rounds) { (df, _) =>
+      df.as("a")
         .join(df.as("b"), col("a.p") === col("b.id"))
         .select(col("a.id").as("id"), col("b.p").as("p"),
-          least(col("a.mn"), col("b.mn")).as("mn"))).df
-      release(df)
-      df = next
-    }
+          least(col("a.mn"), col("b.mn")).as("mn"))
+    }.state.df
     val anchors = df.select(col("p")).distinct()
     val cycleMin = df.select(col("id").as("p"), col("mn"))
       .join(anchors, Seq("p"), "left_semi")
@@ -866,6 +821,7 @@ object Components {
     var hub = e.select(col("src").as("id")).distinct()
       .withColumn("score", lit(1L))
     var auth: DataFrame = null
+    // Hand-written: lazy half-rounds; nothing to materialize or release.
     for (_ <- 1 to rounds) {
       auth = e.join(hub.select(col("id").as("src"), col("score").as("hs")),
           Seq("src"))
@@ -885,12 +841,6 @@ object Components {
     * the monotone Σc checksum (a metadata scalar). */
   private def colorToFixpoint(nodes: DataFrame, e: DataFrame,
       maxInner: Int): DataFrame = {
-    // the Σc convergence checksum rides INSIDE each round's
-    // materializing job — a separate aggregate job per round doubled the
-    // per-round fixed cost of this many-round loop
-    var ptr = materialize(nodes.select(col("id"), col("id").as("c")), 1)
-    var converged = false
-    var inner = 0
     // One propagation step: c'(v) = max(c(v), max over in-edges of
     // c(u), c(c(v))) — edge relax plus pointer jump, monotone
     // non-decreasing per vertex.
@@ -912,16 +862,11 @@ object Components {
     // of its four references (fresh exprIds defeat exchange reuse) —
     // and was a net regression at every scale tried. One step per job
     // is the measured optimum; don't re-fuse.
-    while (!converged && inner < maxInner) {
-      inner += 1
-      val next = materialize(step(ptr.df), 1)
-      // monotone non-decreasing: equal sum = fixpoint
-      converged = next.sum.compareTo(ptr.sum) == 0
-      ptr.release()
-      ptr = next
-    }
-    require(converged, s"SCC coloring did not converge in $maxInner rounds")
-    ptr.df
+    // monotone non-decreasing: an unchanged round is the fixpoint
+    val run = Bsp(materialize(nodes.select(col("id"), col("id").as("c")), 1),
+      maxInner, 1, Bsp.unchanged)((p, _) => step(p))
+    require(run.fixpoint, s"SCC coloring did not converge in $maxInner rounds")
+    run.state.df
   }
 
   /** Strongly connected components of a directed edge list via the
@@ -1000,14 +945,15 @@ object Components {
     // already-materialized frames (metadata-sized handles) and union
     // lazily at the end — the earlier running re-materialized union cost
     // one extra job per round.
-    var Mat(e, nE, _) = materialize(edges.select(col("src"), col("dst"))
+    var e = materialize(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    var Mat(remaining, nRemaining, _) = materialize(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
+    var remaining = materialize(e.df.select(col("src").as("id"))
+      .union(e.df.select(col("dst").as("id"))).distinct())
     val assignedParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var outer = 0
-    withLoopShuffle(edges.sparkSession, nE) {
-    while (nRemaining > 0 && outer < maxOuter) {
+    // Hand-written: replaces two frames a round and keeps its found SCCs.
+    withLoopShuffle(edges.sparkSession, e.rows) {
+    while (remaining.rows > 0 && outer < maxOuter) {
       outer += 1
       // Phase 0: iterated trim — acyclic fringe = singleton SCCs.
       // Each round is ONE materializing job (edges restricted by two
@@ -1015,8 +961,6 @@ object Components {
       // singleton harvest and remaining-set update happen ONCE after
       // the fixpoint, not per round — the earlier per-round
       // both/single/e-rewrite ledger paid 3 driver jobs per layer.
-      var trimming = nRemaining > 0
-      var trimRounds = 0
       // r14 adjudication of "check trim convergence every K rounds":
       // structurally a NO-OP at the job level — the convergence check IS
       // the materialized count, computed inside each layer's materializing
@@ -1037,59 +981,52 @@ object Components {
       // 36 s vs 27-30 s — the CPU rise proves real extra work, not
       // noise). The fused job's extra distinct/semi-join STAGES cost
       // more than the saved job scheduling. Don't re-fuse.
-      while (trimming && trimRounds < maxInner) {
-        trimRounds += 1
-        val Mat(ne, n2, _) = materialize(
-          e.join(e.select(col("dst").as("src")).distinct(), Seq("src"), "left_semi")
-            .join(e.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi"))
-        if (n2 == nE) { trimming = false; release(ne) }
-        else { release(e); e = ne; nE = n2 }
-      }
+      e = Bsp(e, maxInner, done = Bsp.unchanged) { (e, _) =>
+        e.join(e.select(col("dst").as("src")).distinct(), Seq("src"), "left_semi")
+          .join(e.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi")
+      }.state
       // core = endpoints of the trimmed edge set ⊆ remaining; everything
       // outside it is a singleton SCC
-      val Mat(core, nCore, _) = materialize(e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct())
-      if (nCore < nRemaining) {
-        val single = materialize(remaining.join(core, Seq("id"), "left_anti")
+      val core = materialize(e.df.select(col("src").as("id"))
+        .union(e.df.select(col("dst").as("id"))).distinct())
+      if (core.rows < remaining.rows) {
+        val single = materialize(remaining.df.join(core.df, Seq("id"), "left_anti")
           .select(col("id"), col("id").as("c"))).df
         assignedParts += single // forced `single` → old remaining done
-        release(remaining)
+        remaining.release()
         remaining = core
-        nRemaining = nCore
-      } else release(core)
-      if (nRemaining > 0) {
+      } else core.release()
+      if (remaining.rows > 0) {
         // Phase 1: forward max-ancestor coloring.
-        val fwd = colorToFixpoint(remaining, e, maxInner)
+        val fwd = colorToFixpoint(remaining.df, e.df, maxInner)
         // Phase 2: reverse coloring on class-restricted reversed edges.
-        val ec = materialize(e
+        val ec = materialize(e.df
           .join(fwd.select(col("id").as("src"), col("c").as("cs")), Seq("src"))
           .join(fwd.select(col("id").as("dst"), col("c").as("cd")), Seq("dst"))
           .filter(col("cs") === col("cd"))
           .select(col("dst").as("src"), col("src").as("dst"))).df
-        val rev = colorToFixpoint(remaining, ec, maxInner)
+        val rev = colorToFixpoint(remaining.df, ec, maxInner)
         val found = materialize(fwd
           .join(rev.select(col("id"), col("c").as("rc")), Seq("id"))
           .filter(col("c") === col("rc"))
           .select(col("id"), col("c"))).df
         assignedParts += found // buffered: do NOT release
-        val Mat(nr, nRem, _) = materialize(
-          remaining.join(found.select("id"), Seq("id"), "left_anti"))
-        release(remaining)
+        val nr = materialize(
+          remaining.df.join(found.select("id"), Seq("id"), "left_anti"))
+        remaining.release()
         remaining = nr
-        nRemaining = nRem
-        val Mat(ne, nE2, _) = materialize(
-          e.join(found.select(col("id").as("src")), Seq("src"), "left_anti")
+        val ne = materialize(
+          e.df.join(found.select(col("id").as("src")), Seq("src"), "left_anti")
             .join(found.select(col("id").as("dst")), Seq("dst"), "left_anti")
             .select("src", "dst"))
-        release(e)
+        e.release()
         e = ne
-        nE = nE2
         release(fwd); release(ec); release(rev)
       }
     }
     }
-    require(nRemaining == 0, s"SCC did not finish in $maxOuter rounds")
-    release(e); release(remaining) // the returned plan reads only `assigned`
+    require(remaining.rows == 0, s"SCC did not finish in $maxOuter rounds")
+    e.release(); remaining.release() // the returned plan reads only `assigned`
     if (assignedParts.isEmpty)
       return edges.sparkSession.range(0)
         .select(col("id").as("c"), col("id"))
@@ -1128,6 +1065,7 @@ object Components {
     var cur = materialize(e.select(col("esrc").as("start")).distinct()
       .withColumn("node", col("start"))).df // frontier: one row per walk
     var out = cur.withColumn("step", lit(0))
+    // Hand-written: the result reads every step; no state is superseded.
     for (t <- 1 to steps) {
       // xxhash64(lit) is foldable — the per-step constant costs nothing
       val next = cur.join(e, col("node") === col("esrc"))
@@ -1169,6 +1107,7 @@ object Components {
       .withColumn("sig", lit(1L))).df
     var visited = materialize(front.select("pivot", "node")).df
     var levels = Vector(front)
+    // Hand-written: the backward sweep reads every level.
     for (_ <- 1 to depth) {
       val next = materialize(front.join(e, col("node") === col("esrc"))
         .groupBy(col("pivot"), col("edst").as("nnode"))
@@ -1176,12 +1115,15 @@ object Components {
         .join(visited.withColumnRenamed("node", "nnode"),
           Seq("pivot", "nnode"), "left_anti")
         .withColumnRenamed("nnode", "node")).df
-      visited = materialize(visited.union(next.select("pivot", "node"))).df
+      val seen = materialize(visited.union(next.select("pivot", "node"))).df
+      release(visited)
+      visited = seen
       levels :+= next
       front = next
     }
     var deltaNext: DataFrame = null // (pivot, node, delta) one level down
     var acc: DataFrame = null
+    // Hand-written: reads two levels a round; the result reads every `d`.
     for (k <- (depth - 1) to 1 by -1) {
       val w0 = levels(k + 1)
       val wd = (if (deltaNext == null) w0.withColumn("delta", lit(0L))
@@ -1199,6 +1141,7 @@ object Components {
       acc = if (acc == null) d else acc.union(d)
       deltaNext = d
     }
+    (visited +: levels).foreach(release) // the result reads only `acc`
     acc.groupBy("node").agg(sum(col("delta")).as("bc_scaled"))
   }
 }

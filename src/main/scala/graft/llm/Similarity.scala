@@ -1212,34 +1212,35 @@ object Similarity {
       upper.unionByName(upper.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("c"))))
     val m = mR.df // d² rows, reused every round
-    val d2 = mR.rows
-    var v = m.select(col("j")).distinct()
+    val v0 = m.select(col("j")).distinct()
       .select(col("j"), lit(1000000000L).cast("decimal(38,0)").as("x"))
-    Components.withLoopShuffle(df.sparkSession, d2) {
-    for (_ <- 1 to rounds) {
-      val w = m.join(v, Seq("j"))
-        .groupBy(col("i")).agg(sum(col("c") * col("x")).as("w"))
-      val mx = w.agg(max(abs(col("w"))).as("mx"))
-      v = materialize(w.crossJoin(broadcast(mx)).select(col("i").as("j"), expr(
-          """CAST(CASE WHEN w >= 0
-               THEN (w - w % (CAST((mx - mx % 1000000000) / 1000000000
-                 AS DECIMAL(38,0)) + 1))
-                 / (CAST((mx - mx % 1000000000) / 1000000000
-                 AS DECIMAL(38,0)) + 1)
-               ELSE -(((-w) - (-w) % (CAST((mx - mx % 1000000000)
-                 / 1000000000 AS DECIMAL(38,0)) + 1))
-                 / (CAST((mx - mx % 1000000000) / 1000000000
-                 AS DECIMAL(38,0)) + 1))
-             END AS DECIMAL(38,0)) AS x"""))).df
-    }
+    val v = Components.withLoopShuffle(df.sparkSession, mR.rows) {
+      Bsp(Bsp.lazyState(v0), rounds) { (v, _) =>
+        val w = m.join(v, Seq("j"))
+          .groupBy(col("i")).agg(sum(col("c") * col("x")).as("w"))
+        val mx = w.agg(max(abs(col("w"))).as("mx"))
+        w.crossJoin(broadcast(mx)).select(col("i").as("j"), expr(
+            """CAST(CASE WHEN w >= 0
+                 THEN (w - w % (CAST((mx - mx % 1000000000) / 1000000000
+                   AS DECIMAL(38,0)) + 1))
+                   / (CAST((mx - mx % 1000000000) / 1000000000
+                   AS DECIMAL(38,0)) + 1)
+                 ELSE -(((-w) - (-w) % (CAST((mx - mx % 1000000000)
+                   / 1000000000 AS DECIMAL(38,0)) + 1))
+                   / (CAST((mx - mx % 1000000000) / 1000000000
+                   AS DECIMAL(38,0)) + 1))
+               END AS DECIMAL(38,0)) AS x"""))
+      }.state.df
     }
     val m2 = v.agg(max(abs(col("x"))).as("m2"))
     val sgn = v.crossJoin(broadcast(m2)).filter(abs(col("x")) === col("m2"))
       .orderBy(col("j")).limit(1)
       .select(when(col("x") < 0, lit(-1L)).otherwise(lit(1L)).as("sgn"))
-    v.crossJoin(broadcast(sgn))
+    val out = v.crossJoin(broadcast(sgn))
       .select(col("j").cast("int").as("dim_idx"),
         (col("x") * col("sgn")).cast("long").as("loading_scaled"))
       .orderBy("dim_idx")
+    Bsp.releaseUnread(out, m) // after zero rounds `v` still reads `m`
+    out
   }
 }
