@@ -19,6 +19,23 @@
 # (68 queries: a query entry `("qN_name", (s, d) => ...)` in
 # src/main/scala/graft whose body, up to the next entry, matches
 # `\b(Components|Similarity|NearDup)\.`.)
+#
+# The materialize family (every query whose body reaches a frame pinned
+# through `materialize` outside Components' BSP loops, a loop on `Bsp`, or
+# a staged relation, whose blocks it must release):
+#
+#   '^(q111_incremental_neardup|q148_triangle_count|q150_bpe_train|q187_targeted_delete|q195_knn_ivf_pq|q204_bfs_levels|q211_sssp_rounds|q218_entity_resolution|q221_aqe_skew_join|q222_runtime_bloom_join|q223_minhash_dedup_e2e|q226_kcore|q228_chunk_overlap|q229_mmr_rerank|q22_checkpoint_antijoin|q230_label_propagation|q232_rrf_fusion|q235_budget_apportion|q236_containment_pairs|q285_local_clustering|q292_degree_assortativity|q294_lsh_tuning_eval|q298_bipartite_check|q300_corpus_yield_funnel|q312_dedup_keep_best|q314_split_leakage|q316_incremental_components|q318_write_audit_publish|q319_cusum_changepoint|q320_leadlag_xcorr|q322_dow_seasonality|q326_dbscan_grid|q334_hll_sliding_merge|q337_functional_cycles|q338_rfm_segments|q340_landmark_distances|q343_theilsen_trend|q344_mutual_best_matching|q352_jl_projection_eval|q356_ktruss|q35_dedup_ngram_jaccard|q362_modularity|q366_bpe_roundtrip|q36_dedup_minhash_lsh|q373_rake_keywords|q376_pca_power|q378_isotonic_fit|q37_dedup_simhash|q380_hash_walks|q384_bradley_terry|q386_betweenness|q388_kendall_tau|q389_seasonal_decompose|q390_tree_depth2|q393_suffix_ranks|q394_stream_pit_enrich|q396_shapley_attribution|q397_ahash_neardup|q398_semantic_dedup_pq|q403_state_repartition|q40_embed_neardup|q411_double_sweep_diameter|q428_weighted_sample_aes|q429_kcenter_coreset|q432_cuped_adjustment|q433_luby_mis|q435_ring_rebalance|q436_greedy_set_cover|q43_knn_lsh|q444_stream_incremental_neardup|q51_embed_neardup_lsh|q68_corpus_clean_pipeline|q76_dedup_components|q88_semantic_dedup)$'
+#
+# (74 queries: an entry whose body matches `\b(materialize\(|Bsp\b|
+# withScopedConfs\(|Similarity\.(kmeansCells|ivfTopKKmeans|lshTopK|
+# nearDupPairsLsh|pqCodebooks|ivfPqTopK|semanticDedupPq|kCenterGreedy|
+# mmrSelect|pcaTopComponent)\b|NearDup\.(jaccardPairs|containmentPairs|
+# jaccardPairsPrefix|minhashLshPairs|minhashLshAgainstIndex|simhashPairs)\b|
+# TextOps\.suffixRanks|Curation\.greedySetCover|Bpe\.train|
+# Multimodal\.aHashNearDup|Components\.(bfsLevels|multiSourceBfs|
+# mutualBestMatching|lubyMis)\b|(coPurchaseEdges|coPurchaseWeighted|
+# strongCoPurchaseEdges|embNearDupPairs|jaccardPairs08|jaccardPairs05|
+# minhashPairs)\(s, d\))`, the regex joined onto one line.)
 set -euo pipefail
 if [ $# -lt 1 ]; then sed -n '2,/^set -euo/p' "$0" | sed '$d' | sed 's/^# \{0,1\}//'; exit 2; fi
 REGEX="$1"

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlBridge.materialize
 import org.apache.spark.sql.functions._
 
 /** Merges-table-driven BPE encoder — the real subword tokenizer a
@@ -122,14 +123,20 @@ object Bpe {
       nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    var cur = docs
+    // (word, freq, s, np): np counts the adjacent pairs left in s, so the
+    // state's in-job Σ np is zero exactly when no round can learn a merge.
+    def state(word: Column, freq: Column, s: Column) =
+      Seq(word.as("word"), freq.as("freq"), s.as("s"),
+        (size(split(trim(s), " ")) - 1).cast("long").as("np"))
+    val init = materialize(docs
       .select(explode(TextOps.tokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(col("word"), col("freq"),
-        concat(lit(" "), array_join(split(col("word"), ""), " "), lit(" ")).as("s"))
-      .localCheckpoint(true)
+      .select(state(col("word"), col("freq"),
+        concat(lit(" "), array_join(split(col("word"), ""), " "), lit(" "))): _*),
+      3)
     val learned = scala.collection.mutable.ArrayBuffer[(Long, String, String)]()
-    for (r <- 1 to nMerges) {
+    val run = Bsp(init, if (init.sum.signum == 0) 0 else nMerges, 3,
+        Bsp.until(_.sum.signum == 0)) { (cur, r) =>
       val withTk = cur.select(col("freq"), split(trim(col("s")), " ").as("tk"))
       val top = withTk
         .select(col("freq"), col("tk"),
@@ -137,21 +144,17 @@ object Bpe {
         .select(col("freq"), col("a"), element_at(col("tk"), col("i") + 2).as("b"))
         .groupBy("a", "b").agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
-        .collect() // ONE row — the per-round metadata, like a checksum
-      if (top.nonEmpty) {
-        val a: String = top(0).getString(0)
-        val b: String = top(0).getString(1)
-        learned += ((r.toLong, a, b))
-        val p = s" $a $b "
-        val m = s" ${a + b} "
-        cur = cur.select(col("word"), col("freq"),
-            replace(replace(col("s"), lit(p), lit(m)), lit(p), lit(m)).as("s"))
-          .localCheckpoint(true)
-      }
+        .head() // ONE row — the per-round metadata, like a checksum
+      val (a, b) = (top.getString(0), top.getString(1))
+      learned += ((r.toLong, a, b))
+      val p = s" $a $b "
+      val m = s" ${a + b} "
+      cur.select(state(col("word"), col("freq"),
+        replace(replace(col("s"), lit(p), lit(m)), lit(p), lit(m))): _*)
     }
-    learned.toSeq.toDF("rank", "a", "b")
+    Bsp.releaseUnread(learned.toSeq.toDF("rank", "a", "b")
       .select(col("rank"), col("a"), col("b"),
-        concat(col("a"), col("b")).as("merged"))
+        concat(col("a"), col("b")).as("merged")), run.state.df)
   }
 
   /** The generated DuckDB replay of [[train]]: one unrolled CTE trio

@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.GraftSqlBridge.{Mat, materialize, release}
+import org.apache.spark.sql.GraftSqlBridge.{Mat, MatName, materialize}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one BSP round driver: it owns the round state, its release and the
@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * state's job was its last consumer, and lineage is truncated), and the
   * loop stops after `maxRounds` or the first round where `done(prev, next)`
   * holds. The returned state is never released. */
-private[llm] object Bsp {
+private[graft] object Bsp {
   type Done = (Mat, Mat) => Boolean
 
   val never: Done = (_, _) => false
@@ -43,12 +43,19 @@ private[llm] object Bsp {
     Run(state, round, fixpoint)
   }
 
-  /** Release each of a loop's invariant `inputs` that `result` does not
-    * read (after zero rounds a lazy initial state may still read one). */
-  def releaseUnread(result: DataFrame, inputs: DataFrame*): Unit = {
-    def rdds(df: DataFrame) =
-      df.queryExecution.logical.collect { case l: LogicalRDD => l.rdd.id }.toSet
-    val read = rdds(result)
-    inputs.filterNot(rdds(_).subsetOf(read)).foreach(release)
+  /** Release every materialized frame that `inputs` read and `result`
+    * does not: a loop's invariant inputs (after zero rounds a lazy initial
+    * state may still read one), or the frames an eagerly materialized
+    * consumer has superseded. Call it once `result`'s own materialization
+    * (if any) has run, and only on inputs whose frames this scope owns.
+    * Returns `result`. */
+  def releaseUnread(result: DataFrame, inputs: DataFrame*): DataFrame = {
+    def rdds(df: DataFrame) = df.queryExecution.logical.collect {
+      case l: LogicalRDD if l.rdd.name == MatName => l.rdd
+    }
+    val read = rdds(result).map(_.id).toSet
+    inputs.flatMap(rdds).filterNot(r => read(r.id))
+      .foreach(_.unpersist(blocking = false))
+    result
   }
 }

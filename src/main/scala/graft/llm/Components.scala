@@ -246,7 +246,6 @@ object Components {
           (lit(tele) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("r"))
     }.state.df
     Bsp.releaseUnread(ranks, e, vertices, outdeg)
-    ranks
   }
 
   /** Personalized PageRank (integer-scaled, exact): the teleport mass
@@ -281,7 +280,6 @@ object Components {
           expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("r"))
     }.state.df
     Bsp.releaseUnread(ranks, e, v, outdeg)
-    ranks
   }
 
   /** Bounded-depth BFS from one source over an undirected edge list:
@@ -300,8 +298,10 @@ object Components {
     * @param edges (src, dst) pairs; direction/duplicates ignored
     * @return (node, depth) — every vertex within `maxDepth` hops of `src`
     */
-  def bfsLevels(edges: DataFrame, src: Long, maxDepth: Int): DataFrame =
-    bfsLevelsPrepared(prepareUndirected(edges), src, maxDepth)
+  def bfsLevels(edges: DataFrame, src: Long, maxDepth: Int): DataFrame = {
+    val und = prepareUndirected(edges)
+    Bsp.releaseUnread(bfsLevelsPrepared(und, src, maxDepth), und)
+  }
 
   /** Canonicalize + dedup + mirror an edge list into the materialized
     * bidirectional form the BFS loops join against. Exposed so callers
@@ -374,7 +374,8 @@ object Components {
     // Same [[prepareUndirected]] canonicalization and two-level dedup
     // window as [[bfsLevelsPrepared]] (the depth >= d-1 argument holds
     // per root independently).
-    multiSourceBfsPrepared(prepareUndirected(edges), sources, maxDepth)
+    val und = prepareUndirected(edges)
+    Bsp.releaseUnread(multiSourceBfsPrepared(und, sources, maxDepth), und)
   }
 
   /** [[multiSourceBfs]] over an edge list already satisfying the
@@ -495,6 +496,7 @@ object Components {
         }
       }
     }
+    release(e0); release(matched) // the result reads only the m_r frames
     out
   }
 
@@ -640,6 +642,7 @@ object Components {
       release(prevE)
       release(prevActive)
     }
+    release(active) // the last survivor set: read by no part
     misParts.reduce(_ union _).select(col("v").as("node"), col("mis_round"))
   }
 

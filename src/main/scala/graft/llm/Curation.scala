@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlBridge.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1049,7 +1050,7 @@ object Curation {
     * corpus' sources and you want the union of their distinct content
     * maximized. Elements are 8-byte gram hashes, so every round's state
     * shuffles longs only; per round ONE anti-join against the picked
-    * source's (checkpointed) element set, one map-side-combined
+    * source's (materialized) element set, one map-side-combined
     * per-source count, and a single min(struct) argmax row to the
     * driver. Ties break on the lexicographically smallest source.
     *
@@ -1059,30 +1060,25 @@ object Curation {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = pairs.sparkSession
     import spark.implicits._
-    var remaining = pairs.select(col("source"), col("h"))
-      .localCheckpoint(true)
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, Long, Long)]
     var cum = 0L
-    var r = 0
-    var exhausted = false
-    while (r < k && !exhausted) {
-      r += 1
+    // Stops on an empty `remaining`: the one state whose pick is null.
+    val init = materialize(pairs.select(col("source"), col("h")))
+    val run = Bsp(init, if (init.rows == 0) 0 else k,
+        done = Bsp.until(_.rows == 0)) { (remaining, r) =>
       val pick = remaining.groupBy("source").agg(count(lit(1)).as("g"))
         .agg(min(struct((-col("g")).as("ng"), col("source").as("s"))).as("m"))
         .select(col("m.s"), (-col("m.ng")).as("g")).head()
-      if (pick.isNullAt(0)) exhausted = true
-      else {
-        val (src, gained) = (pick.getString(0), pick.getLong(1))
-        cum += gained
-        out += ((r.toLong, src, gained, cum))
-        val covered = remaining.filter(col("source") === src).select("h")
-        remaining = remaining.filter(col("source") =!= src)
-          .join(covered, Seq("h"), "left_anti")
-          .localCheckpoint(true)
-      }
+      val (src, gained) = (pick.getString(0), pick.getLong(1))
+      cum += gained
+      out += ((r.toLong, src, gained, cum))
+      val covered = remaining.filter(col("source") === src).select("h")
+      remaining.filter(col("source") =!= src)
+        .join(covered, Seq("h"), "left_anti")
     }
-    out.toSeq.toDF("round", "source", "gained", "cum_covered")
+    Bsp.releaseUnread(out.toSeq.toDF("round", "source", "gained", "cum_covered"),
+      run.state.df)
   }
 
   def kneserNeyBigrams(docs: DataFrame, idCol: String, textCol: String,

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftSqlBridge.{materialize, release}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -105,7 +106,9 @@ object LlmQueries {
       sweepStale(parent, key, dir.getName)
       val tmp = new java.io.File(parent,
         s".$key-$sig.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-      build.write.mode("overwrite").parquet(tmp.toString)
+      val built = build
+      built.write.mode("overwrite").parquet(tmp.toString)
+      Bsp.releaseUnread(s.emptyDataFrame, built) // readers read the copy
       try
         java.nio.file.Files.move(tmp.toPath, dir.toPath,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -662,10 +665,9 @@ object LlmQueries {
       // Materialize the gated+deduped corpus once — it feeds BOTH the
       // jaccard pair generation and the final anti-join, and would
       // otherwise re-run the gates + window dedup per branch.
-      val deduped = Dedup.keeperFirst(
+      val deduped = materialize(Dedup.keeperFirst(
         gated.withColumn("fp", TextOps.fingerprint(col("text"))),
-        Seq("fp"), "doc_id").drop("fp")
-        .localCheckpoint(true)
+        Seq("fp"), "doc_id").drop("fp")).df
       // The pair set among the deduped survivors IS the staged
       // full-corpus Jaccard-0.8 relation restricted to surviving
       // endpoints: the Jaccard of a pair depends on nothing but the two
@@ -1192,15 +1194,15 @@ object LlmQueries {
       val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
       val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
       // The "stored" index: in production this is read back from parquet.
+      // Persisted, not materialized: the one job computing the matches
+      // fills it, and it is released once they are materialized.
       val index = NearDup.minhashSignatures(corpus, "doc_id", "text",
           n = 3, k = 64)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val res = NearDup.minhashLshAgainstIndex(batch, "doc_id", "text",
           index, n = 3, bands = 16, rowsPerBand = 4, tau = 0.5)
-        .orderBy("d1", "d2")
-      val out = res.localCheckpoint(true)
       index.unpersist()
-      out
+      Bsp.releaseUnread(materialize(res.orderBy("d1", "d2")).df, res)
     }, Some(XxHashOracle.minhashIncrementalSql(n = 3, bands = 16,
       rowsPerBand = 4, tau = 0.5,
       batchPred = "DOCID % 10 = 0", corpusPred = "DOCID % 10 <> 0"))),
@@ -2497,7 +2499,7 @@ object LlmQueries {
       // Both distances on element-wise DOUBLE arithmetic (floats cast
       // before subtracting — float-subtract-then-widen would diverge
       // from the oracle's DOUBLE[] replay).
-      val scored = base.filter(col("vec_id") =!= 3L)
+      val scoredPlan = base.filter(col("vec_id") =!= 3L)
         .crossJoin(broadcast(q))
         .select(col("vec_id"),
           cosineSim(col("embedding"), col("q_emb")).as("cos"),
@@ -2505,7 +2507,7 @@ object LlmQueries {
               (a, b) => (a.cast("double") - b.cast("double")) *
                 (a.cast("double") - b.cast("double"))),
             lit(0.0), (acc, x) => acc + x).as("dist2"))
-        .localCheckpoint(true)
+      val scored = materialize(scoredPlan).df
       // Each retriever's pool: TakeOrderedAndProject top-50 (distributed
       // partial top-k), then rank within the k-sized pool — never a
       // corpus-wide unpartitioned window.
@@ -2882,8 +2884,8 @@ object LlmQueries {
       import s.implicits._
       val docs = t(s, d, "documents")
       val truth = jaccardPairs05(s, d).select("d1", "d2")
-      val sigs = NearDup.minhashSignatures(docs, "doc_id", "text",
-        n = 3, k = 16).localCheckpoint(true)
+      val sigs = materialize(NearDup.minhashSignatures(docs, "doc_id", "text",
+        n = 3, k = 16)).df
       val configs = Seq((16, 1), (8, 2), (4, 4))
       // All three configs' candidate sets ride ONE tagged frame, so the
       // per-config accounting is a single keyed aggregate instead of
@@ -2941,8 +2943,8 @@ object LlmQueries {
       val dEdges = und.select(col("src"), (col("dst") + BipOff).as("dst"))
         .union(und.select(col("dst").as("src"),
           (col("src") + BipOff).as("dst")))
-      val cc2 = Components.connectedComponentsStars(dVerts, dEdges)
-        .localCheckpoint(true)
+      val cc = Components.connectedComponentsStars(dVerts, dEdges)
+      val cc2 = Bsp.releaseUnread(materialize(cc).df, cc)
       // The original graph's components fall out of the SAME doubled-CC
       // run: for v's original component K, v's doubled component
       // contains w or w' for EVERY w in K (bipartite K splits into the
@@ -3038,7 +3040,7 @@ object LlmQueries {
       val toked = t(s, d, "documents").select(col("doc_id"), col("text"),
         TextOps.tokens(col("text")).as("tk"),
         TextOps.tokensLower(col("text")).as("__tkl"))
-      val flags = toked.select(col("doc_id"), col("tk"),
+      val flags = materialize(toked.select(col("doc_id"), col("tk"),
           (TextOps.langIdFromTokens(col("text"), col("__tkl")) === "en")
             .as("f1"),
           (TextOps.distinctTokenRatioFrom(col("tk")) >= 0.3 &&
@@ -3049,8 +3051,7 @@ object LlmQueries {
         .withColumn("keep3", col("f12") && col("doc_id") ===
           min(when(col("f12"), col("doc_id")))
             .over(Window.partitionBy("__fp")))
-        .drop("__fp")
-        .localCheckpoint(true)
+        .drop("__fp")).df
       def grams13(df: DataFrame) = df.select(col("doc_id"),
           explode(array_distinct(NearDup.wordNgrams(col("tk"), 13)))
             .as("gram"))
@@ -3063,18 +3064,18 @@ object LlmQueries {
       val contaminated = grams13(train)
         .join(broadcast(benchG), Seq("g"), "left_semi")
         .select("doc_id").distinct()
-      val s4 = train.join(contaminated, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
+      val s4 = materialize(
+        train.join(contaminated, Seq("doc_id"), "left_anti")).df
       val nov5 = TextOps.ngramNoveltyTokens(s4, "doc_id", "tk", n = 3)
         .filter(col("novelty_bp") >= 2500)
       def cnt(df: DataFrame, nm: String) = df.agg(count(lit(1)).as(nm))
-      val wide = flags.agg(count(lit(1)).as("c0"),
+      val wide = materialize(flags.agg(count(lit(1)).as("c0"),
           count(when(col("f1"), 1)).as("c1"),
           count(when(col("f12"), 1)).as("c2"),
           count(when(col("keep3"), 1)).as("c3"))
         .crossJoin(broadcast(cnt(s4, "c4")))
-        .crossJoin(broadcast(cnt(nov5, "c5")))
-        .localCheckpoint(true)
+        .crossJoin(broadcast(cnt(nov5, "c5")))).df
+      Bsp.releaseUnread(wide, flags, s4)
       Seq(("1_langid", "c0", "c1"), ("2_gopher_quality", "c1", "c2"),
         ("3_exact_dedup", "c2", "c3"), ("4_decontaminate", "c3", "c4"),
         ("5_novelty", "c4", "c5"))
@@ -3320,9 +3321,9 @@ object LlmQueries {
           pmod(col("v2"), lit(10)) =!= 0)
       val oldEndpoints = oldPairs.select(col("v1").as("id"))
         .union(oldPairs.select(col("v2").as("id"))).distinct()
-      val oldCC = Components.connectedComponentsStars(oldEndpoints,
+      val cc = Components.connectedComponentsStars(oldEndpoints,
           oldPairs.select(col("v1").as("src"), col("v2").as("dst")))
-        .localCheckpoint(true)
+      val oldCC = Bsp.releaseUnread(materialize(cc).df, cc)
       val fresh = emb.filter(pmod(col("vec_id"), lit(10)) === 0)
         .select(col("vec_id"))
       val newEdges = allPairs
@@ -3960,10 +3961,9 @@ object LlmQueries {
     ("q352_jl_projection_eval", (s: SparkSession, d: String) => {
       val k = 16
       val dim = 64
-      val samp = t(s, d, "embeddings")
+      val samp = materialize(t(s, d, "embeddings")
         .filter(pmod(xxhash64(col("vec_id")), lit(8)) === 0)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-        .localCheckpoint(true)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))).df
       val signs = s.range(k).select(col("id").cast("long").as("j"),
         expr(s"transform(sequence(0, ${dim - 1}), i -> " +
           s"1.0D - 2.0D * pmod(xxhash64(id * $dim + CAST(i AS BIGINT)), 2))")
@@ -4179,10 +4179,9 @@ object LlmQueries {
     ("q362_modularity", (s: SparkSession, d: String) => {
       val edges = strongCoPurchaseEdges(s, d)
       val lab = Components.labelPropagation(edges, rounds = 4)
-      val e = edges.select(least(col("src"), col("dst")).as("u"),
+      val e = materialize(edges.select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint(true)
+        .filter(col("u") =!= col("v")).distinct()).df
       val el = e
         .join(lab.select(col("node").as("u"), col("label").as("lu")), "u")
         .join(lab.select(col("node").as("v"), col("label").as("lv")), "v")
@@ -6905,18 +6904,16 @@ object LlmQueries {
         .coalesce(1).write.parquet(s"$root/in/d1")
       // The "stored" index (production: read back from parquet), forced
       // BEFORE the stream starts so batches join, never rebuild it.
-      val index = NearDup.minhashSignatures(corpus, "doc_id", "text",
-          n = 3, k = 64)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      index.count()
+      val index = materialize(NearDup.minhashSignatures(corpus, "doc_id",
+        "text", n = 3, k = 64)).df
       val stream = s.readStream.schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", "1").parquet(s"$root/in/*")
       val w = stream.writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
-          NearDup.minhashLshAgainstIndex(b, "doc_id", "text", index,
+          val m = NearDup.minhashLshAgainstIndex(b, "doc_id", "text", index,
               n = 3, bands = 16, rowsPerBand = 4, tau = 0.5)
-            .write.mode("append").parquet(s"$root/out")
-          ()
+          m.write.mode("append").parquet(s"$root/out")
+          release(m)
         }
         .option("checkpointLocation", s"$root/ck")
         .trigger(Trigger.AvailableNow())
@@ -6926,7 +6923,7 @@ object LlmQueries {
         val q = w.start()
         q.awaitTermination()
       }
-      index.unpersist()
+      release(index)
       val nBatches = new java.io.File(s"$root/ck/commits")
         .listFiles().count(f => f.getName.forall(_.isDigit))
       require(nBatches >= 2,

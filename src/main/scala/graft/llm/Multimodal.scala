@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.GraftSqlBridge.materialize
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: media as opaque binary columns with typed
@@ -476,12 +477,11 @@ object Multimodal {
           CAST((i * nb) div 64 AS INT) + 1, 1) AS STRING))""").as("v"))
     val mean = px.groupBy("doc_id")
       .agg(expr("sum(v) div 63").as("mean"))
-    val h = px.join(mean, "doc_id")
+    val h = materialize(px.join(mean, "doc_id") // id + 63-bit hash per payload
       .groupBy("doc_id")
       .agg(sum(expr(
         "CASE WHEN v > mean THEN shiftleft(CAST(1 AS BIGINT), i)" +
-          " ELSE 0L END")).as("h"))
-      .localCheckpoint(true) // id + 63-bit hash per payload
+          " ELSE 0L END")).as("h"))).df
     val bands = h.select(col("doc_id"), col("h"),
         explode(sequence(lit(0), lit(2))).as("b"))
       .select(col("doc_id"), col("h"), col("b"),

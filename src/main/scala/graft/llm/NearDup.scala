@@ -54,8 +54,9 @@ object NearDup {
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, tau: Double, maxDf: Option[Long] = None): DataFrame = {
     // The gram index feeds several plan branches (both join sides, sizes,
-    // the df filter): materialize it once. At 100 TB this is the persisted
-    // inverted index.
+    // the df filter): evaluate it once. At 100 TB this is the persisted
+    // inverted index. `persist`, not `materialize`: the one job computing
+    // `res` fills it (no job of its own), and it lives only until then.
     val grams = gramsOf(docs, idCol, textCol, n)
       .select(col("doc_id"), xxhash64(col("gram")).as("gram"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -83,7 +84,7 @@ object NearDup {
     // Materialize the (small — pairs above tau) result eagerly so the
     // gram-index cache can be released instead of accumulating across
     // queries in a long-lived session.
-    val res = out.localCheckpoint(true)
+    val res = materialize(out).df
     grams.unpersist()
     res
   }
@@ -109,6 +110,7 @@ object NearDup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, minPct: Int): DataFrame = {
     require(minPct > 0 && minPct <= 100, s"minPct in (0,100], got $minPct")
+    // Persisted for the one job computing `res`, as in [[jaccardPairs]].
     val grams = gramsOf(docs, idCol, textCol, n)
       .select(col("doc_id"), xxhash64(col("gram")).as("gram"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -125,7 +127,7 @@ object NearDup {
         col("n_common"), col("sz1").as("sz_sub"))
       .union(inter.select(col("d2"), col("d1"), col("n_common"), col("sz2")))
       .filter(col("n_common") * 100 >= lit(minPct) * col("sz_sub"))
-    val res = directed.localCheckpoint(true)
+    val res = materialize(directed).df
     grams.unpersist()
     res
   }
@@ -162,6 +164,7 @@ object NearDup {
   def jaccardPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
       n: Int, tau: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    // Persisted for the one job computing `res`, as in [[jaccardPairs]].
     val grams = gramsOf(docs, idCol, textCol, n)
       .select(col("doc_id"), xxhash64(col("gram")).as("gram"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -197,7 +200,7 @@ object NearDup {
         col("n_common").cast("double") / (col("sz1") + col("sz2") - col("n_common")))
       .filter(col("jaccard") >= tau)
       .select(col("d1"), col("d2"), col("jaccard"))
-    val res = out.localCheckpoint(true)
+    val res = materialize(out).df
     grams.unpersist()
     res
   }
@@ -284,8 +287,8 @@ object NearDup {
     // Materialize the signature index once (one row + k longs per doc — the
     // persisted MinHash index at corpus scale): the banding self-join below
     // would otherwise recompute the whole gram->signature aggregation on
-    // BOTH join sides. Persisted (not localCheckpoint) so it can be
-    // released after the result materializes, like the jaccard path.
+    // BOTH join sides. Persisted, not materialized: the one job computing
+    // `res` fills it, and it is released right after, like the jaccard path.
     val sigs = minhashSignatures(docs, idCol, textCol, n, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Buckets carry ONLY ids: candidate pairs dedup on two longs, and the
@@ -302,7 +305,7 @@ object NearDup {
       sigs.select(col("doc_id").as("d1"), col("sig").as("sig1")),
       sigs.select(col("doc_id").as("d2"), col("sig").as("sig2")), k, tau)
     // Eager-materialize the small pair set, then release the sig cache.
-    val res = out.localCheckpoint(true)
+    val res = materialize(out).df
     sigs.unpersist()
     res
   }
@@ -318,6 +321,7 @@ object NearDup {
       corpusSigs: DataFrame, n: Int, bands: Int, rowsPerBand: Int,
       tau: Double): DataFrame = {
     val k = bands * rowsPerBand
+    // Persisted for the one job computing `res`, as in [[jaccardPairs]].
     val bSigs = minhashSignatures(batch, idCol, textCol, n, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cand = bandedOf(bSigs, bands, rowsPerBand).as("a")
@@ -328,7 +332,7 @@ object NearDup {
     val out = scorePairs(cand,
       bSigs.select(col("doc_id").as("d1"), col("sig").as("sig1")),
       corpusSigs.select(col("doc_id").as("d2"), col("sig").as("sig2")), k, tau)
-    val res = out.localCheckpoint(true)
+    val res = materialize(out).df
     bSigs.unpersist()
     res
   }
@@ -362,6 +366,7 @@ object NearDup {
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int): DataFrame = {
     require(maxDist <= 3, "chunk blocking is exact only for maxDist <= 3")
+    // Persisted for the one job computing `res`, as in [[jaccardPairs]].
     val sigs = simhashSignatures(docs, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val chunkStructs = (0 until 4).map { j =>
@@ -381,7 +386,7 @@ object NearDup {
       .dropDuplicates("d1", "d2")
       .filter(col("hamming") <= maxDist)
     // Eager-materialize the small pair set, then release the signature cache.
-    val res = out.localCheckpoint(true)
+    val res = materialize(out).df
     sigs.unpersist()
     res
   }

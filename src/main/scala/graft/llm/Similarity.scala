@@ -99,28 +99,24 @@ object Similarity {
     * are k rows). */
   def kmeansCells(emb: DataFrame, k: Int, iters: Int): DataFrame = {
     val base = emb.select(col("vec_id"), col("embedding"))
-    var cents = base.orderBy("vec_id").limit(k)
-      .select(col("vec_id").as("cell"), col("embedding").cast("array<float>").as("centroid"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    val init = materialize(base.orderBy("vec_id").limit(k)
+      .select(col("vec_id").as("cell"), col("embedding").cast("array<float>").as("centroid")))
+    // Each round's k-row centroid frame is materialized: lineage is
+    // truncated so the plan stays flat at any iteration count (without
+    // this, each Lloyd's round stacks the full assign+average subtree
+    // onto the next round's plan).
+    Bsp(init, iters) { (cents, _) =>
       // Exchange-free nearest-centroid argmax (see assignCells): each
       // Lloyd's round is one projection pass over the corpus + the k-row
       // re-average — the corpus never shuffles during assignment.
-      val assigned = assignCells(base, cents)
-      // Eager-materialize the k-row centroid frame each round: lineage is
-      // truncated so the plan stays flat at any iteration count (without
-      // this, each Lloyd's round stacks the full assign+average subtree
-      // onto the next round's plan).
-      cents = assigned.select(col("cell"),
+      assignCells(base, cents).select(col("cell"),
           posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy("cell", "pos").agg(avg(col("x")).as("m"))
         .groupBy("cell")
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("cell"),
           transform(col("pm"), p => p.getField("m")).cast("array<float>").as("centroid"))
-        .localCheckpoint(true)
-    }
-    cents
+    }.state.df
   }
 
   /** IVF top-k over k-means cells (no natural cell column needed). */
@@ -255,8 +251,8 @@ object Similarity {
     // Materialize the corpus bucket index (3 ints per (vec, table)): it is
     // the reusable LSH index at scale, and the broadcast candidate join
     // should probe it, not recompute every hyperplane signature.
-    val corpus = bucketed(base, "embedding").select("vec_id", "table_id", "sig")
-      .localCheckpoint(true)
+    val corpus = materialize(
+      bucketed(base, "embedding").select("vec_id", "table_id", "sig")).df
     val cand = corpus.join(broadcast(q), Seq("table_id", "sig"))
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id")
@@ -291,13 +287,12 @@ object Similarity {
     // Materialized eagerly (3 ints per (vec, table) row) so the self-join
     // below reads the bucket index instead of re-evaluating tables x bits
     // hyperplane signatures on both sides.
-    val bucketed = embG.select(col("vec_id"),
+    val bucketed = materialize(embG.select(col("vec_id"),
         explode(array((0 until tables).map(t =>
           struct(lit(t).as("table_id"), sigFor(col("embedding"), t).as("sig"))): _*))
           .as("tb"))
       .select(col("vec_id"),
-        col("tb.table_id").as("table_id"), col("tb.sig").as("sig"))
-      .localCheckpoint(true)
+        col("tb.table_id").as("table_id"), col("tb.sig").as("sig"))).df
     val cand = bucketed.as("a")
       .join(bucketed.as("b"),
         col("a.table_id") === col("b.table_id") && col("a.sig") === col("b.sig") &&
@@ -354,11 +349,10 @@ object Similarity {
       df.select(col("vec_id"), explode(array(subStructs: _*)).as("e"))
         .select(col("e.sub").as("sub"), col("vec_id"), col("e.sv").as("sv"))
     val subs = explodeSubs(emb)
-    var cents = explodeSubs(emb.orderBy("vec_id").limit(k))
+    val init = materialize(explodeSubs(emb.orderBy("vec_id").limit(k))
       .select(col("sub"), col("vec_id").as("cell"),
-        col("sv").cast("array<float>").as("centroid"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
+        col("sv").cast("array<float>").as("centroid")))
+    val cents = Bsp(init, iters) { (cents, _) =>
       val carr = cents.agg(array_sort(collect_list(
         struct(col("sub"), col("cell"), col("centroid")))).as("__c"))
       val assigned = subs.crossJoin(broadcast(carr))
@@ -368,7 +362,7 @@ object Similarity {
             (-c.getField("cell")).as("negcell")))))
         .select(col("sub"), col("sv"),
           (-col("__best").getField("negcell")).as("cell"))
-      cents = assigned.select(col("sub"), col("cell"),
+      assigned.select(col("sub"), col("cell"),
           posexplode(col("sv")).as(Seq("pos", "x")))
         .groupBy("sub", "cell", "pos").agg(avg(col("x")).as("m"))
         .groupBy("sub", "cell")
@@ -376,8 +370,7 @@ object Similarity {
         .select(col("sub"), col("cell"),
           transform(col("pm"), p => p.getField("m"))
             .cast("array<float>").as("centroid"))
-        .localCheckpoint(true)
-    }
+    }.state.df
     val w = Window.partitionBy("sub").orderBy("cell")
     cents.withColumn("code", row_number().over(w) - 1)
       .select(col("sub"), col("code"), col("centroid"))
@@ -610,18 +603,17 @@ object Similarity {
     val base = emb.select(col("vec_id"), col("embedding"))
     val cand = sdcCandidates(emb, cellSource, m, subDim, kCodes, iters,
       tauApprox)
-    val confirmed = cand
+    // Materialized: consumed three times below (both endpoint projections
+    // and the CC edge input) — without this the exact-confirm join
+    // re-attaches the float embeddings and re-scores every candidate
+    // pair once per consumer.
+    val confirmed = materialize(cand
       .join(base.select(col("vec_id").as("v1"),
         col("embedding").as("e1")), Seq("v1"))
       .join(base.select(col("vec_id").as("v2"),
         col("embedding").as("e2")), Seq("v2"))
       .filter(cosineSim(col("e1"), col("e2")) >= tau)
-      .select(col("v1"), col("v2"))
-      // Pinned: consumed three times below (both endpoint projections
-      // and the CC edge input) — without this the exact-confirm join
-      // re-attaches the float embeddings and re-scores every candidate
-      // pair once per consumer.
-      .localCheckpoint(true)
+      .select(col("v1"), col("v2"))).df
     val endpoints = confirmed.select(col("v1").as("id"))
       .union(confirmed.select(col("v2").as("id"))).distinct()
     val cc = Components.connectedComponentsStars(endpoints,
@@ -646,11 +638,12 @@ object Similarity {
       .select(col("vec_id"), dotD(col("embedding"), col("embedding")).as("n2"))
       .join(labels, Seq("vec_id"), "left")
       .withColumn("cluster_id", coalesce(col("component"), col("vec_id")))
-    clustered.groupBy("cluster_id")
+    Bsp.releaseUnread(clustered.groupBy("cluster_id")
       .agg(max_by(col("vec_id"), struct(col("n2"), (-col("vec_id"))
           .as("__nv"))).as("keeper_id"),
         count(lit(1)).as("n_members"))
-      .select(col("cluster_id"), col("keeper_id"), col("n_members"))
+      .select(col("cluster_id"), col("keeper_id"), col("n_members")),
+      cand, cc)
   }
 
   /** The candidate stage of [[semanticDedupPq]], exposed for plan-shape
@@ -1068,8 +1061,9 @@ object Similarity {
     * broadcasts (a one-row frame); the min-distance update is a map-only
     * pass over the (vec_id, q, mind2) state — the vector column never
     * crosses a shuffle — and the next center is a single
-    * max(struct(mind2, -id)) argmax row to the driver. State
-    * localCheckpoints per round so lineage stays flat across k rounds.
+    * max(struct(mind2, -id)) argmax row to the driver. The state runs on
+    * [[Bsp]], materialized per round so lineage stays flat across k
+    * rounds; each round picks from the state it is given.
     *
     * Returns (round, center_id, radius2): radius2 is the covering radius²
     * BEFORE that round's center was added (round 1 = seed, radius2 0). */
@@ -1084,27 +1078,29 @@ object Similarity {
     def d2(a: Column, b: Column): Column =
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
         lit(0L), (acc, v) => acc + v)
-    var state = q.crossJoin(broadcast(
+    val init = materialize(q.crossJoin(broadcast(
         q.filter(col("vec_id") === seed).select(col("q").as("cq"))))
-      .select(col("vec_id"), col("q"), d2(col("q"), col("cq")).as("mind2"))
-      .localCheckpoint(true)
+      .select(col("vec_id"), col("q"), d2(col("q"), col("cq")).as("mind2")))
     val out = scala.collection.mutable.ArrayBuffer((1L, seed, 0L))
-    for (r <- 2 to k) {
-      val m = state
+    // Round r's center: the farthest point of the state it is given.
+    def pick(state: DataFrame, r: Int): Long = {
+      val (radius2, cid) = state
         .agg(max(struct(col("mind2"), (-col("vec_id")).as("nv"))).as("m"))
         .select(col("m.mind2"), (-col("m.nv")).as("cid"))
         .as[(Long, Long)].head()
-      val (radius2, cid) = m
       out += ((r.toLong, cid, radius2))
-      if (r < k) {
-        state = state.crossJoin(broadcast(state
-            .filter(col("vec_id") === cid).select(col("q").as("cq"))))
-          .select(col("vec_id"), col("q"),
-            least(col("mind2"), d2(col("q"), col("cq"))).as("mind2"))
-          .localCheckpoint(true)
-      }
+      cid
     }
-    out.toSeq.toDF("round", "center_id", "radius2")
+    // k − 2 state updates: the last center needs no state after it.
+    val last = Bsp(init, k - 2) { (state, round) =>
+      val cid = pick(state, round + 1)
+      state.crossJoin(broadcast(state
+          .filter(col("vec_id") === cid).select(col("q").as("cq"))))
+        .select(col("vec_id"), col("q"),
+          least(col("mind2"), d2(col("q"), col("cq"))).as("mind2"))
+    }.state.df
+    if (k > 1) pick(last, k)
+    Bsp.releaseUnread(out.toSeq.toDF("round", "center_id", "radius2"), last)
   }
 
   /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein '98) —
@@ -1115,7 +1111,7 @@ object Similarity {
     * never recomputed float scores).
     *
     * 100 TB posture: relevance is computed ONCE over the candidate scan
-    * and pinned (localCheckpoint); each of the k greedy rounds then
+    * and materialized; each of the k greedy rounds then
     * joins the candidates against a ≤k-row BROADCAST selected set, takes
     * a map-side-combined per-candidate max, and ships exactly one argmax
     * row to the driver (TakeOrderedAndProject(1)). Nothing corpus-sized
@@ -1128,12 +1124,13 @@ object Similarity {
     val base = emb.select(col("vec_id"), col("embedding"))
     val q = base.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb"))
-    val cand = base.filter(col("vec_id") =!= queryId)
+    val cand = materialize(base.filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("embedding"),
-        cosineSim(col("embedding"), col("q_emb")).as("rel"))
-      .localCheckpoint(true)
+        cosineSim(col("embedding"), col("q_emb")).as("rel"))).df
     val picked = scala.collection.mutable.ArrayBuffer.empty[Long]
+    // Not on Bsp: `cand` never changes and the picks live on the driver,
+    // so a per-round state would add a materializing job per round.
     for (_ <- 1 to k) {
       val best =
         if (picked.isEmpty)
@@ -1151,9 +1148,9 @@ object Similarity {
         }
       picked += best.select("vec_id").as[Long].head()
     }
-    picked.toSeq.zipWithIndex
+    Bsp.releaseUnread(picked.toSeq.zipWithIndex
       .map { case (id, i) => (i + 1L, id) }
-      .toDF("rank", "vec_id")
+      .toDF("rank", "vec_id"), cand)
   }
 
   /** Top principal component of an embedding column by POWER ITERATION in
@@ -1180,9 +1177,8 @@ object Similarity {
     * (dim_idx, loading_scaled) with |loading| ≤ 10⁹. */
   def pcaTopComponent(df: DataFrame, vecCol: String,
       rounds: Int = 3): DataFrame = {
-    val q = df.select(transform(col(vecCol),
-        x => floor(x.cast("double") * lit(1000000d)).cast("long")).as("q"))
-      .localCheckpoint(true) // scanned twice (sums + products)
+    val q = materialize(df.select(transform(col(vecCol), // scanned twice
+        x => floor(x.cast("double") * lit(1000000d)).cast("long")).as("q"))).df
     val nRow = q.agg(count(lit(1)).cast("decimal(38,0)").as("n"))
     val sums = q.select(posexplode(col("q")).as(Seq("i", "x")))
       .groupBy("i").agg(sum("x").cast("decimal(38,0)").as("s"))
@@ -1240,7 +1236,6 @@ object Similarity {
       .select(col("j").cast("int").as("dim_idx"),
         (col("x") * col("sgn")).cast("long").as("loading_scaled"))
       .orderBy("dim_idx")
-    Bsp.releaseUnread(out, m) // after zero rounds `v` still reads `m`
-    out
+    Bsp.releaseUnread(out, m, q) // after zero rounds `v` still reads `m`
   }
 }

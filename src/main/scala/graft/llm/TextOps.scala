@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlBridge.{materialize, release}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -335,7 +336,7 @@ object TextOps {
     * dedup detection needs only context length ≥ the dedup window. */
   def suffixRanks(docs: DataFrame, idCol: String, textCol: String,
       rounds: Int): DataFrame = {
-    // r13 OPT: checkpoint the tokenized relation and the global-position
+    // r13 OPT: materialize the tokenized relation and the global-position
     // relation. `toks` feeds both the length aggregate and the position
     // join (and the prefix-sum's range exchange re-executes ITS child
     // for boundary sampling), and `pos` feeds both the vocab rank and
@@ -343,16 +344,14 @@ object TextOps {
     // ran 3-4x before the first doubling round (guide §2.4). Both are
     // corpus-position-sized (two longs + a token), the same blocks a
     // 100 TB run would persist as its tokenization pass output.
-    val toks = docs.select(col(idCol).as("doc_id"),
-      posexplode(tokens(col(textCol))).as(Seq("j", "tok")))
-      .localCheckpoint(true)
+    val toks = materialize(docs.select(col(idCol).as("doc_id"),
+      posexplode(tokens(col(textCol))).as(Seq("j", "tok")))).df
     val lens = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val offs = graft.ops.Dist
       .exclusivePrefixSum(lens, Seq(col("doc_id")), "n", "off")
       .select("doc_id", "off")
-    val pos = toks.join(offs, "doc_id")
-      .select((col("off") + col("j")).as("p"), col("tok"))
-      .localCheckpoint(true)
+    val pos = materialize(toks.join(offs, "doc_id")
+      .select((col("off") + col("j")).as("p"), col("tok"))).df
     // r14 MEASURED NEGATIVE — do not re-try: fusing each ranking into a
     // single range exchange (partition-local dense_rank over the FULL
     // relation + a per-partition distinct-count offset table, replacing
@@ -366,26 +365,29 @@ object TextOps {
     // and hash-joining the ranks back.
     val vocab = graft.ops.Dist
       .globalRowNumber(pos.select("tok").distinct(), Seq(col("tok")), "r")
-    var cur = pos.join(vocab, "tok").select("p", "r").localCheckpoint(true)
-    for (k <- 1 to rounds) {
+    val init = materialize(pos.join(vocab, "tok").select("p", "r"))
+    Bsp.releaseUnread(init.df, toks, pos)
+    // The round's pair relation: read by that round's state job only.
+    var pairs: DataFrame = null
+    val ranks = Bsp(init, rounds) { (cur, k) =>
+      release(pairs) // the previous round's: its state now exists
       val gap = 1L << (k - 1)
       val ahead = cur.select((col("p") - gap).as("p"), col("r").as("r2"))
-      // r13 OPT: checkpoint the pair relation. It is consumed twice —
+      // r13 OPT: materialize the pair relation. It is consumed twice —
       // under `ranked` (where the range exchange ALSO runs a boundary-
       // sampling pass) and in the closing join — so unmaterialized it
       // re-ran the positional self-join 2-3x per round (guide §2.4:
       // share one evaluation instead of re-deriving). One corpus-sized
       // materialization job per round buys back two self-join runs.
-      val pairs = cur.withColumnRenamed("r", "r1")
+      pairs = materialize(cur.withColumnRenamed("r", "r1")
         .join(ahead, Seq("p"), "left")
-        .na.fill(0L, Seq("r2"))
-        .localCheckpoint(true)
+        .na.fill(0L, Seq("r2"))).df
       val ranked = graft.ops.Dist.globalRowNumber(
         pairs.select("r1", "r2").distinct(),
         Seq(col("r1"), col("r2")), "r")
-      cur = pairs.join(ranked, Seq("r1", "r2"))
-        .select("p", "r").localCheckpoint(true)
-    }
-    cur
+      pairs.join(ranked, Seq("r1", "r2")).select("p", "r")
+    }.state.df
+    release(pairs)
+    ranks
   }
 }

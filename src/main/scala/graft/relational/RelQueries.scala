@@ -1,10 +1,12 @@
 package graft.relational
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftSqlBridge.{materialize, release}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.llm.Bsp
 import graft.ops._
 import graft.schemas.Contracts
 import graft.streaming.Streams
@@ -475,12 +477,11 @@ object RelQueries {
     // §2.4 D3 — processed-window checkpoint skip (anti-join on the day log).
     ("q22_checkpoint_antijoin", (s: SparkSession, d: String) => {
       // Both anti-join sides derive from the same day list; eager-materialize
-      // it so the events table is scanned once. localCheckpoint (not a bare
-      // persist) so the metadata-sized blocks are GC-reclaimed with the RDD
-      // instead of accumulating across queries in a long session.
-      val days = t(s, d, "events")
-        .select(date_format(col("ts"), "yyyy-MM-dd").as("day")).distinct()
-        .localCheckpoint(true)
+      // it so the events table is scanned once. `materialize` (not a bare
+      // persist): the result reads the metadata-sized blocks, and they are
+      // released with it instead of accumulating across queries.
+      val days = materialize(t(s, d, "events")
+        .select(date_format(col("ts"), "yyyy-MM-dd").as("day")).distinct()).df
       val processed = days.filter(col("day") < "2024-01-15")
       Dedup.checkpointFilter(days, processed, Seq("day")).orderBy("day")
     }, Some("""
@@ -3039,10 +3040,9 @@ object RelQueries {
       // r13 OPT: the per-user aggregate feeds BOTH the upsert batch and
       // the doomed-key filter — without the pin the events scan+aggregate
       // runs twice (guide §2.4 repeated-subtree discipline).
-      val users = t(s, d, "events").groupBy("user_id")
+      val users = materialize(t(s, d, "events").groupBy("user_id")
         .agg(count(lit(1)).as("n"),
-          Exact.sum(Exact.dec(col("value"), 12)).as("sv"))
-        .localCheckpoint(true)
+          Exact.sum(Exact.dec(col("value"), 12)).as("sv"))).df
       // 8 buckets, not 16: the doomed keys (user_id % 7 = 3) land in
       // every bucket regardless, so a wider modulus only doubles the
       // staged-swap filesystem traffic this query pays twice (upsert +
@@ -3052,6 +3052,7 @@ object RelQueries {
         .select("user_id")
       graft.streaming.Streams.deleteKeys(dir, Seq("user_id"), doomed,
         batchId = 1L)
+      release(users) // both consumers wrote; the result reads the files
       s.read.parquet(dir)
         .select(col("user_id"), col("n"), col("sv").cast("double").as("sv"))
         .orderBy("user_id")
@@ -3843,7 +3844,7 @@ object RelQueries {
     // entities with min-id canonical labels. The full dedupe-entities
     // workload COMPOSED from library operators — candidate generation
     // never leaves keyed joins, CC shuffles two longs per edge; the
-    // match graph is localCheckpoint'ed ONCE before CC (it feeds both the
+    // match graph is materialized ONCE before CC (it feeds both the
     // endpoint set and the iterated edge relation — without the pin each
     // consumer re-runs the whole candidate pipeline). The oracle replays
     // quadratic-within-block levenshtein plus a transitive-closure
@@ -3852,15 +3853,15 @@ object RelQueries {
       import graft.llm.{Components, NearDup}
       val c = t(s, d, "customer").select(col("c_custkey").as("id"),
         col("c_nationkey").as("blk"), col("c_name").as("name"))
-      val e = NearDup.editDistance1Edges(c, "id", "name", "blk")
-        .localCheckpoint(true)
+      val e = materialize(
+        NearDup.editDistance1Edges(c, "id", "name", "blk")).df
       val endpoints = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct()
-      Components.connectedComponentsStars(endpoints, e)
+      Bsp.releaseUnread(Components.connectedComponentsStars(endpoints, e)
         .groupBy(col("component").as("entity_id"))
         .agg(count(lit(1)).as("n_members"), sum(col("id")).as("sum_members"))
         .filter(col("n_members") >= 2)
-        .orderBy("entity_id")
+        .orderBy("entity_id"), e)
     }, Some("""
       WITH RECURSIVE
       c AS (SELECT c_custkey AS id, c_nationkey AS blk, c_name AS name
@@ -3984,7 +3985,7 @@ object RelQueries {
     // pinned in PlanQualitySpec with this same construction) — the
     // engine-side answer to skew that ops.Skew's manual salting (q61/62)
     // solves by hand. Confs are scoped: the join materializes eagerly
-    // under them (localCheckpoint), then they restore, so no other
+    // under them (materialize), then they restore, so no other
     // query inherits the disabled broadcast. The oracle checks the
     // result is exactly the un-skew-handled answer.
     ("q221_aqe_skew_join", (s: SparkSession, d: String) => {
@@ -6897,11 +6898,10 @@ object RelQueries {
       s.sql(s"CREATE TABLE $stg (user_id BIGINT, n BIGINT, sv DOUBLE)")
       s.sql(s"CREATE TABLE $live (user_id BIGINT, n BIGINT, sv DOUBLE)")
       s.sql(s"INSERT INTO $stg SELECT user_id, n, sv FROM q318_src")
-      val audit = Checks.verify(s.table(stg), Seq(
+      val audit = materialize(Checks.verify(s.table(stg), Seq(
         Checks.uniqueness("uniqueness_user_id", col("user_id")),
         Checks.rowCheck("completeness_user_id", col("user_id").isNull),
-        Checks.rowCheck("range_n_positive", !(col("n") > 0))))
-        .localCheckpoint(true)
+        Checks.rowCheck("range_n_positive", !(col("n") > 0))))).df
       val clean = audit.agg(max(when(col("status") === "FAIL", 1L)
         .otherwise(0L))).head().getLong(0) == 0L
       if (clean) s.sql(s"INSERT INTO $live SELECT * FROM $stg")
@@ -6938,11 +6938,10 @@ object RelQueries {
       // One corpus scan into the day-grain relation; every branch below
       // (prefix sum, totals, peak) reuses the calendar-sized checkpoint
       // instead of re-scanning orders.
-      val daily = t(s, d, "orders")
+      val daily = materialize(t(s, d, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum((Exact.dec(col("o_totalprice"), 12) * 100).cast("long"))
-          .cast("long").as("cents"))
-        .localCheckpoint(true)
+          .cast("long").as("cents"))).df
       val cum = daily
         .withColumn("k", row_number().over(Window.orderBy("day")).cast("long"))
         .withColumn("pre", sum("cents").over(Window.orderBy("day")
@@ -6982,11 +6981,10 @@ object RelQueries {
     // Day-grain self-join per lag — calendar-sized relations, the
     // analysis cost is independent of the event volume feeding it.
     ("q320_leadlag_xcorr", (s: SparkSession, d: String) => {
-      val daily = t(s, d, "events")
+      val daily = materialize(t(s, d, "events")
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(when(col("event_type") === "view", 1)).as("v"),
-          count(when(col("event_type") === "purchase", 1)).as("p"))
-        .localCheckpoint(true)
+          count(when(col("event_type") === "purchase", 1)).as("p"))).df
       val lags = daily.sparkSession.range(-3, 4)
         .select(col("id").cast("int").as("lag"))
       val pairs = daily.as("a").crossJoin(broadcast(lags))
@@ -7036,11 +7034,10 @@ object RelQueries {
     // hash-compares and cannot drift under re-aggregation. Two tiny
     // aggregates (dow-grain and one total) over the daily relation.
     ("q322_dow_seasonality", (s: SparkSession, d: String) => {
-      val daily = t(s, d, "orders")
+      val daily = materialize(t(s, d, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum((Exact.dec(col("o_totalprice"), 12) * 100).cast("long"))
-          .cast("long").as("cents"))
-        .localCheckpoint(true)
+          .cast("long").as("cents"))).df
       val byDow = daily
         .groupBy((weekday(col("day")) + 1).cast("long").as("iso_dow"))
         .agg(count(lit(1)).as("n_days"),
@@ -7166,13 +7163,12 @@ object RelQueries {
     // privilege; the engine's grid + CC shape is what survives scale.
     ("q326_dbscan_grid", (s: SparkSession, d: String) => {
       val eps2 = 225L // eps = 15 in scaled coords
-      val pts = t(s, d, "events")
+      val pts = materialize(t(s, d, "events")
         .groupBy("user_id")
         .agg(sum((Exact.dec(col("value"), 12) * 100).cast("long"))
           .cast("long").as("sc"), count(lit(1)).as("n"))
         .select(col("user_id"), expr("sc div 1000").as("x"),
-          (col("n") * 5).as("y"))
-        .localCheckpoint(true)
+          (col("n") * 5).as("y"))).df
       val cells = pts
         .withColumn("cx", expr("x div 15")).withColumn("cy", expr("y div 15"))
       val a = cells.select(col("user_id").as("u"), col("x").as("ux"),
@@ -7183,13 +7179,13 @@ object RelQueries {
         .select(col("user_id").as("v"), col("x").as("vx"),
           col("y").as("vy"), (col("cx") + col("dx")).as("cx"),
           (col("cy") + col("dy")).as("cy"))
-      val nb = a.join(b, Seq("cx", "cy"))
+      val nb = materialize(a.join(b, Seq("cx", "cy"))
         .filter(col("u") =!= col("v") &&
           (col("ux") - col("vx")) * (col("ux") - col("vx")) +
             (col("uy") - col("vy")) * (col("uy") - col("vy")) <= eps2)
-        .select(col("u"), col("v")).localCheckpoint(true)
-      val core = nb.groupBy("u").agg(count(lit(1)).as("dg"))
-        .filter(col("dg") >= 3).select(col("u")).localCheckpoint(true)
+        .select(col("u"), col("v"))).df
+      val core = materialize(nb.groupBy("u").agg(count(lit(1)).as("dg"))
+        .filter(col("dg") >= 3).select(col("u"))).df
       val coreEdges = nb
         .join(core, Seq("u"), "left_semi")
         .join(core.select(col("u").as("v")), Seq("v"), "left_semi")
@@ -7197,14 +7193,14 @@ object RelQueries {
         .select(col("u").as("src"), col("v").as("dst"))
       val cc = graft.llm.Components.connectedComponentsStars(
         core.select(col("u").as("id")), coreEdges)
-      val coreLab = core.join(cc.select(col("id").as("u"),
+      val coreLab = materialize(core.join(cc.select(col("id").as("u"),
           col("component")), Seq("u"), "left")
-        .select(col("u"), coalesce(col("component"), col("u")).as("cluster"))
-        .localCheckpoint(true)
+        .select(col("u"), coalesce(col("component"), col("u")).as("cluster"))).df
       val borderLab = nb.join(core, Seq("u"), "left_anti")
         .join(coreLab.select(col("u").as("v"), col("cluster")), Seq("v"))
         .groupBy("u").agg(min("cluster").as("cluster"))
-      pts.join(coreLab.select(col("u").as("user_id"),
+      // `coreLab`'s job was the CC's last reader
+      Bsp.releaseUnread(pts.join(coreLab.select(col("u").as("user_id"),
           col("cluster").as("core_cl")), Seq("user_id"), "left")
         .join(borderLab.select(col("u").as("user_id"),
           col("cluster").as("border_cl")), Seq("user_id"), "left")
@@ -7213,7 +7209,7 @@ object RelQueries {
             .when(col("border_cl").isNotNull, "border")
             .otherwise("noise").as("role"),
           coalesce(col("core_cl"), col("border_cl")).as("cluster"))
-        .orderBy("user_id")
+        .orderBy("user_id"), cc)
     }, Some("""
       WITH RECURSIVE p AS (SELECT user_id,
           CAST(SUM(CAST(value AS DECIMAL(12,2)) * 100) AS BIGINT) AS sc,
@@ -7422,7 +7418,7 @@ object RelQueries {
     ("q334_hll_sliding_merge", (s: SparkSession, d: String) => {
       val ev = t(s, d, "events")
         .select(to_date(col("ts")).as("day"), col("user_id"))
-      val du = ev.distinct().localCheckpoint(true)
+      val du = materialize(ev.distinct()).df
       val sk = ev.groupBy("day")
         .agg(hll_sketch_agg(col("user_id")).as("sk"))
       val spine = du.select(col("day").as("d")).distinct()
@@ -7556,21 +7552,21 @@ object RelQueries {
       // + map pass) plus once more for the ntile's count aggregate.
       // Folded three deep over an UNMATERIALIZED spine, the per-customer
       // aggregate re-ran ~20x (measured 24 s CPU for a 2.4 s query).
-      // Checkpointing the base and each fold output caps every stage at
+      // Materializing the base and each fold output caps every stage at
       // one evaluation — at 100 TB this is exactly the "materialize the
       // decision table once" posture (guide §2.3/§3.3); scores are a
       // pure function of the total order, so results are bit-identical.
-      val base = o.crossJoin(broadcast(mx))
+      val base = materialize(o.crossJoin(broadcast(mx))
         .withColumn("recency", datediff(col("mxd"), col("last_d"))
-          .cast("long"))
-        .localCheckpoint(true)
-      val scored = Seq[(String, Seq[Column])](
+          .cast("long")))
+      val folds = Seq[(String, Seq[Column])](
         "r_score" -> Seq(col("recency").desc, col("o_custkey")),
         "f_score" -> Seq(col("f"), col("o_custkey")),
-        "m_score" -> Seq(col("m"), col("o_custkey"))
-      ).foldLeft(base) { case (df, (out, ord)) =>
-        graft.ops.Dist.globalNtile(df, ord, 5, out).localCheckpoint(true)
-      }
+        "m_score" -> Seq(col("m"), col("o_custkey")))
+      val scored = Bsp(base, folds.size) { (df, r) =>
+        val (out, ord) = folds(r - 1)
+        graft.ops.Dist.globalNtile(df, ord, 5, out)
+      }.state.df
       scored
         .select(col("o_custkey"), col("recency"), col("f"), col("m"),
           col("r_score"), col("f_score"), col("m_score"),
@@ -7739,11 +7735,10 @@ object RelQueries {
     // across engines; the lower median is picked by rank, not
     // interpolation.
     ("q343_theilsen_trend", (s: SparkSession, d: String) => {
-      val daily = t(s, d, "events")
+      val daily = materialize(t(s, d, "events")
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("y"))
-        .select(unix_date(col("day")).cast("long").as("x"), col("y"))
-        .localCheckpoint(true)
+        .select(unix_date(col("day")).cast("long").as("x"), col("y"))).df
       val p = daily.as("a").join(daily.as("b"), col("a.x") < col("b.x"))
         .select(((col("b.y") - col("a.y")).cast("double") /
           (col("b.x") - col("a.x"))).as("slope"))
@@ -8484,12 +8479,11 @@ object RelQueries {
         .select(expr("n_chars div 10").as("b"),
           (col("lang") === "en").cast("long").as("y"))
         .groupBy("b").agg(count(lit(1)).as("w"), sum("y").as("p"))
-      val pref = bins
+      val pref = materialize(bins // bin relation: metadata-sized
         .withColumn("pnIn", sum("p").over(Window.orderBy("b")))
         .withColumn("pwIn", sum("w").over(Window.orderBy("b")))
         .withColumn("pnEx", col("pnIn") - col("p"))
-        .withColumn("pwEx", col("pwIn") - col("w"))
-        .localCheckpoint(true) // bin relation: metadata-sized
+        .withColumn("pwEx", col("pwIn") - col("w"))).df
       val pairs = pref.select(col("b").as("j"), col("pnEx"), col("pwEx"))
         .join(pref.select(col("b").as("k"), col("pnIn"), col("pwIn")),
           col("j") <= col("k"))
@@ -8669,18 +8663,18 @@ object RelQueries {
         .agg(sum(Exact.dec(col("value"), 18) * 100).cast("long").as("c"))
       val a = per.select(col("user_id"), col("ty").as("ta"), col("c").as("ca"))
       val b = per.select(col("user_id"), col("ty").as("tb"), col("c").as("cb"))
-      val wins = a.join(b, Seq("user_id"))
+      // k²-row win matrix: metadata-sized
+      val wins = materialize(a.join(b, Seq("user_id"))
         .filter(col("ta") =!= col("tb") && col("ca") > col("cb"))
         .groupBy(col("ta").as("wi"), col("tb").as("wj"))
-        .agg(count(lit(1)).as("w"))
-        .localCheckpoint(true) // k²-row win matrix: metadata-sized
+        .agg(count(lit(1)).as("w"))).df
       val nij = wins.select(col("wi").as("i"), col("wj").as("j"), col("w"))
         .unionAll(wins.select(col("wj").as("i"), col("wi").as("j"),
           col("w")))
         .groupBy("i", "j").agg(sum(col("w")).as("nij"))
       val wi = wins.groupBy(col("wi").as("i")).agg(sum(col("w")).as("win"))
-      var st = wi.select(col("i"), lit(1000000L).as("s"))
-      for (_ <- 1 to 3) {
+      val init = Bsp.lazyState(wi.select(col("i"), lit(1000000L).as("s")))
+      val st = Bsp(init, 3) { (st, _) =>
         val d0 = nij
           .join(st.select(col("i"), col("s").as("si")), "i")
           .join(st.select(col("i").as("j"), col("s").as("sj")), "j")
@@ -8697,11 +8691,10 @@ object RelQueries {
             "(CAST(win AS DECIMAL(38,0)) * 1000000000000000000) div den")
             .as("sr"))
         val mx = raw.agg(max(col("sr")).as("mx"))
-        st = raw.crossJoin(broadcast(mx))
+        raw.crossJoin(broadcast(mx))
           .select(col("i"),
             expr("greatest(1L, (sr * 1000000L) div mx)").as("s"))
-          .localCheckpoint(true)
-      }
+      }.state.df
       wi.join(st, "i").select(col("i").as("event_type"), col("win"),
           col("s").as("strength_scaled"))
         .orderBy(col("strength_scaled").desc, col("event_type"))
@@ -8856,13 +8849,12 @@ object RelQueries {
     // Complements Spearman (q215): same monotone-association family,
     // concordance semantics instead of rank covariance.
     ("q388_kendall_tau", (s: SparkSession, d: String) => {
-      val cells = Tables(s, d, "lineitem").select(
+      val cells = materialize(Tables(s, d, "lineitem").select( // grid: metadata-sized
           expr("CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT)" +
             " div 500").as("xb"),
           expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100" +
             " AS BIGINT) div 200000").as("yb"))
-        .groupBy("xb", "yb").agg(count(lit(1)).as("c"))
-        .localCheckpoint(true) // grid: metadata-sized
+        .groupBy("xb", "yb").agg(count(lit(1)).as("c"))).df
       val a = cells.select(col("xb").as("ax"), col("yb").as("ay"),
         col("c").as("ac"))
       val b = cells.select(col("xb").as("bx"), col("yb").as("by"),
@@ -8929,15 +8921,14 @@ object RelQueries {
         .agg((Exact.sum(Exact.dec(col("o_totalprice"), 12)) * 100).cast("long")
           .as("cents"))
       val w = Window.orderBy("day").rowsBetween(-3, 3)
-      val tr = daily
+      val tr = materialize(daily // day-grain relation
         .withColumn("w_sum", sum(col("cents")).over(w))
         .withColumn("w_n", count(lit(1)).over(w))
         .filter(col("w_n") === 7)
         .withColumn("trend_c", expr("w_sum div 7"))
         .withColumn("detr_c", col("cents") - col("trend_c"))
         .withColumn("dow",
-          pmod(datediff(col("day"), lit("1970-01-01").cast("date")), lit(7)))
-        .localCheckpoint(true) // day-grain relation
+          pmod(datediff(col("day"), lit("1970-01-01").cast("date")), lit(7)))).df
       val seas = tr.groupBy("dow")
         .agg(sum(col("detr_c")).as("sd"), count(lit(1)).as("cd"))
         .select(col("dow"), expr("sd div cd").as("seas_c"))
@@ -8981,8 +8972,8 @@ object RelQueries {
     ("q390_tree_depth2", (s: SparkSession, d: String) => {
       val ev = Tables(s, d, "events").select(col("value").as("v"),
         (col("event_type") === "purchase").cast("long").as("y"))
-      val cand = ev.groupBy("v").agg(count(lit(1)).as("cnt"),
-        sum(col("y")).as("pos")).localCheckpoint(true)
+      val cand = materialize(ev.groupBy("v").agg(count(lit(1)).as("cnt"),
+        sum(col("y")).as("pos"))).df
       def gini(nl: String, al: String, nr: String, ar: String) =
         expr(s"""(CAST($nl AS DECIMAL(38,0)) * $nl
             - CAST($al AS DECIMAL(38,0)) * $al
@@ -9009,8 +9000,8 @@ object RelQueries {
             col("m.g").as("gini_scaled") :+ col("m.nl").as("n_left") :+
             (col("m.n") - col("m.nl")).as("n_right"): _*)
       }
-      val root = bestOver(cand.withColumn("node", lit("root")),
-        Seq("node")).localCheckpoint(true)
+      val root = materialize(bestOver(cand.withColumn("node", lit("root")),
+        Seq("node"))).df
       val t0 = root.select(col("threshold").as("t0"))
       val sided = cand.crossJoin(broadcast(t0))
         .withColumn("node", when(col("v") <= col("t0"), "L").otherwise("R"))
@@ -9168,7 +9159,7 @@ object RelQueries {
     ("q394_stream_pit_enrich", (s: SparkSession, d: String) => {
       val stream = Tables.stream(s, d, "events")
       val cut = "2024-01-15 00:00:00"
-      val dim = Tables(s, d, "events").select("event_type").distinct()
+      val dim = materialize(Tables(s, d, "events").select("event_type").distinct()
         .select(col("event_type").as("ty"), explode(array(
           struct(lit("1900-01-01 00:00:00").cast("timestamp").as("vf"),
             lit(cut).cast("timestamp").as("vt"),
@@ -9177,8 +9168,7 @@ object RelQueries {
             lit("9999-01-01 00:00:00").cast("timestamp").as("vt"),
             (length(col("event_type")) * 2).cast("long").as("rate"))))
           .as("v"))
-        .select(col("ty"), col("v.vf"), col("v.vt"), col("v.rate"))
-        .localCheckpoint(true)
+        .select(col("ty"), col("v.vf"), col("v.vt"), col("v.rate"))).df
       val joined = stream.join(broadcast(dim),
           col("event_type") === col("ty") &&
             col("ts") >= col("vf") && col("ts") < col("vt"))
@@ -9186,8 +9176,9 @@ object RelQueries {
         .agg(count(lit(1)).as("n"),
           sum((Exact.dec(col("value"), 16) * 100).cast("long")
             * col("rate")).as("amount_cents"))
-      Streams.drain(joined, "complete", sized(s, d))
-        .select("event_type", "rate", "n", "amount_cents")
+      val drained = Streams.drain(joined, "complete", sized(s, d))
+      release(dim) // every micro-batch that reads it has run
+      drained.select("event_type", "rate", "n", "amount_cents")
         .orderBy("event_type", "rate")
     }, Some("""
       WITH types AS (SELECT DISTINCT event_type FROM events),
@@ -9254,27 +9245,25 @@ object RelQueries {
     // Efficiency law Σφ = k!(v(full) − v(∅)) is spec-pinned.
     ("q396_shapley_attribution", (s: SparkSession, d: String) => {
       val ev = Tables(s, d, "events")
-      val chDim = ev.select("event_type")
+      val chMat = materialize(ev.select("event_type") // k rows
         .filter(col("event_type") =!= "purchase").distinct()
         .withColumn("idx", (row_number().over(
-          Window.orderBy("event_type")) - 1).cast("long"))
-        .localCheckpoint(true) // k rows
-      val k = chDim.count().toInt
+          Window.orderBy("event_type")) - 1).cast("long")))
+      val (chDim, k) = (chMat.df, chMat.rows.toInt)
       require(k == 4, s"shapley lattice hardcodes k=4 channels, got $k")
       val userMask = ev.join(broadcast(chDim), "event_type")
         .select(col("user_id"), col("idx")).distinct()
         .groupBy("user_id")
         .agg(sum(expr("shiftleft(1L, CAST(idx AS INT))")).as("mask"))
-      val w = ev.filter(col("event_type") === "purchase")
+      val w = materialize(ev.filter(col("event_type") === "purchase") // <= 2^k rows
         .groupBy("user_id").agg(count(lit(1)).as("pur"))
         .join(userMask, Seq("user_id"), "left")
         .na.fill(0L, Seq("mask"))
-        .groupBy("mask").agg(sum(col("pur")).as("w"))
-        .localCheckpoint(true) // <= 2^k rows
+        .groupBy("mask").agg(sum(col("pur")).as("w"))).df
       val lattice = s.range(1L << k).select(col("id").as("S"))
-      val v = lattice.join(w, expr("(mask & ~S) = 0"), "left")
-        .groupBy("S").agg(coalesce(sum(col("w")), lit(0L)).as("v"))
-        .localCheckpoint(true)
+      val v = materialize(lattice.join(w, expr("(mask & ~S) = 0"), "left")
+        .groupBy("S").agg(coalesce(sum(col("w")), lit(0L)).as("v"))).df
+      release(w) // read only by `v`'s job
       val v2 = v.select(col("S").as("S2"), col("v").as("vplus"))
       chDim.join(broadcast(lattice), expr("((S >> idx) & 1) = 0"))
         .join(broadcast(v), "S")
@@ -9586,17 +9575,17 @@ object RelQueries {
       GROUP BY 1 ORDER BY user_id"""))
   )
 
-  /** Runs `df` eagerly (localCheckpoint) under temporarily-set session
+  /** Runs `df` eagerly (materialize) under temporarily-set session
     * confs, restoring every previous value afterward — the scoping that
     * makes per-query optimizer demonstrations (q221/q222) safe: the
-    * returned frame serves from checkpointed blocks, so later reads
+    * returned frame serves from materialized blocks, so later reads
     * don't re-plan under the restored confs, and no other query
     * inherits the overrides. */
   private def withScopedConfs(s: SparkSession, confs: (String, String)*)(
       df: DataFrame): DataFrame = {
     val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
     confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try df.localCheckpoint(true)
+    try materialize(df).df
     finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)

@@ -118,7 +118,8 @@ object Streams {
 
   /** K6 analogue (Flume fan-out): one micro-batch, two sinks. Use with
     * `.writeStream.foreachBatch(fanout(dirA, dirB))`. The batch is
-    * persisted so the two writes don't recompute the lineage. */
+    * persisted for this one micro-batch so the two writes don't recompute
+    * the lineage; the first write fills it, so it adds no job. */
   def fanout(primaryDir: String, auditDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
     batch.persist()
@@ -174,7 +175,7 @@ object Streams {
     // P7: state rows carry their ingest time, as the reference's Redis
     // upsert injects utcnow (fetch_data_energinet.py:44).
     val incoming = graft.ops.Keys.ingestTag(batch.dropDuplicates(keys))
-      .withColumn("__bucket", bucket).persist()
+      .withColumn("__bucket", bucket).persist() // one call's batch; no job
     try {
       // At most nBuckets ints — metadata-sized, drives partition pruning
       // and the swap loop.
@@ -322,7 +323,7 @@ object Streams {
         s"$statePath has no .nbuckets marker — not an upsertBatch state dir"))
     val stateDir = statePath.toString
     val bucket = pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).cast("int")
-    val dk = manifest.withColumn("__bucket", bucket).persist()
+    val dk = manifest.withColumn("__bucket", bucket).persist() // this call only
     try {
       val touched = dk.select("__bucket").distinct()
         .collect().map(_.getInt(0)).sorted.toIndexedSeq

@@ -11,9 +11,10 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Eager materialization of BSP loop state (and of any frame read more
-    * than once downstream) with EXACT statistics: the one way the graph
-    * loops materialize a round. A single job copies `df`'s rows into
+  /** Eager materialization with EXACT statistics: the one way `src/main`
+    * pins a frame — BSP round state, a frame read more than once
+    * downstream, a result computed before its inputs are released. A
+    * single job copies `df`'s rows into
     * local-checkpointed blocks, truncating lineage, and returns in the
     * same job the exact row count and, when `sumCol >= 0`, the exact Σ of
     * that LONG column — the loops' (count, sum) convergence checksum,
@@ -105,7 +106,8 @@ object GraftSqlBridge {
         case _ => ()
       }
 
-  private val MatName = "graft.materialize"
+  /** The name of every RDD [[materialize]] pins. */
+  val MatName = "graft.materialize"
 
   /** A frame materialized by [[materialize]]: its exact row count and the
     * in-job Σ of the summed column (zero when none). */

@@ -97,4 +97,24 @@ class MatSpec extends SparkSpec {
     assert(got == (0L until n).map(u => u -> (u + step) % n).toMap)
     cur.release()
   }
+
+  test("src/main pins frames only through materialize") {
+    // `Dataset.localCheckpoint` copies an estimate and pins its blocks
+    // until a GC; a site may keep it only with a measured reason on the
+    // line or the line above (`measured:` and its PlanDump pair/timing).
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "GraftSqlBridge.scala").toSeq
+    assert(files.size > 50)
+    val bare = files.flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      lines.indices.collect {
+        case i if lines(i).contains("localCheckpoint(") &&
+            !(lines(i) +: lines.lift(i - 1).toSeq).exists(_.contains("measured:")) =>
+          s"$f:${i + 1}"
+      }
+    }
+    assert(bare.isEmpty, s"localCheckpoint( without a measured reason: $bare")
+  }
 }

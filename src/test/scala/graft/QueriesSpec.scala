@@ -25,8 +25,18 @@ class QueriesSpec extends SparkSpec {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name executes at sf0.001") {
-      val n = fn(spark, sfDir).count()
+      val before = pinned
+      val df = fn(spark, sfDir)
+      val n = df.count()
       assert(n >= 0)
+      // A query leaves pinned only the materialized frames its result
+      // reads (a subset: `ContextCleaner` can only remove extra ones);
+      // release them so the suite does not pile up blocks.
+      val read = leaves(df)
+      val left = pinned -- before
+      assert(left.subsetOf(read), s"pinned past the query: ${left -- read}")
+      spark.sparkContext.getPersistentRDDs.filter(r => read(r._1))
+        .values.foreach(_.unpersist(blocking = false))
       // A query leaves nothing running and no memory-sink view behind.
       assert(spark.streams.active.isEmpty)
       val memViews = spark.catalog.listTables().collect()

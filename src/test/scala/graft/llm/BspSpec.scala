@@ -2,7 +2,6 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftSqlBridge.materialize
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -12,14 +11,6 @@ import graft.SparkSpec
   * blocks it leaves pinned are exactly the ones its plan reads. */
 class BspSpec extends SparkSpec {
   import spark.implicits._
-
-  private val MatName = "graft.materialize"
-
-  private def pinned: Set[Int] = spark.sparkContext.getPersistentRDDs
-    .collect { case (id, rdd) if rdd.name == MatName => id }.toSet
-
-  private def leaves(df: DataFrame): Set[Int] = df.queryExecution.logical
-    .collect { case l: LogicalRDD if l.rdd.name == MatName => l.rdd.id }.toSet
 
   private val chain = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
     (5L, 6L), (6L, 4L), (7L, 8L), (2L, 5L))
@@ -76,6 +67,15 @@ class BspSpec extends SparkSpec {
   }
   private def weighted =
     chain.map { case (s, d) => (s, d, s + d) }.toDF("src", "dst", "w")
+  private def ids = {
+    val rnd = new scala.util.Random(9)
+    Seq.tabulate(30)(i => (i.toLong, Array.fill(4)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+  }
+  private def sets = Seq("a" -> 1L, "a" -> 2L, "a" -> 3L, "b" -> 3L,
+    "b" -> 4L, "c" -> 5L, "c" -> 1L).toDF("source", "h")
+  private def words = Seq(1L -> "low lower lowest", 2L -> "newer wider low",
+    3L -> "a b a b").toDF("id", "text")
 
   // Each loop on the driver, run and collected: the materialized RDDs it
   // leaves pinned must be exactly its result's `LogicalRDD` leaves.
@@ -103,7 +103,24 @@ class BspSpec extends SparkSpec {
     "Similarity.pcaTopComponent" -> (() =>
       Similarity.pcaTopComponent(emb, "embedding")),
     "Similarity.pcaTopComponent, 0 rounds" -> (() =>
-      Similarity.pcaTopComponent(emb, "embedding", 0))
+      Similarity.pcaTopComponent(emb, "embedding", 0)),
+    "Similarity.kCenterGreedy" -> (() => Similarity.kCenterGreedy(ids, 4)),
+    "Similarity.kCenterGreedy, k = 1" -> (() =>
+      Similarity.kCenterGreedy(ids, 1)),
+    "Similarity.mmrSelect" -> (() => Similarity.mmrSelect(ids, 3L, 3, 0.7)),
+    "Similarity.kmeansCells" -> (() => Similarity.kmeansCells(ids, 3, 2)),
+    "Curation.greedySetCover" -> (() => Curation.greedySetCover(sets, 3)),
+    "Curation.greedySetCover, exhausted" -> (() =>
+      Curation.greedySetCover(sets, 9)),
+    "Bpe.train" -> (() => Bpe.train(words, "id", "text", 4)),
+    "Bpe.train, out of pairs" -> (() => Bpe.train(words, "id", "text", 40)),
+    "TextOps.suffixRanks" -> (() => TextOps.suffixRanks(words, "id", "text", 2)),
+    // hand-written loops that keep every round's frame
+    "bfsLevels" -> (() => Components.bfsLevels(edges, 1L, 3)),
+    "multiSourceBfs" -> (() => Components.multiSourceBfs(edges, Seq(1L, 7L), 3)),
+    "mutualBestMatching" -> (() => Components.mutualBestMatching(
+      weighted.select(col("src").as("u"), col("dst").as("v"), col("w")), 3)),
+    "lubyMis" -> (() => Components.lubyMis(edges, 3))
   ).foreach { case (name, loop) =>
     test(s"loop state: $name pins only what its result reads") {
       val before = pinned

@@ -65,7 +65,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("kmeansCells: lineage stays flat at iters=10 (eager per-round materialize)") {
     val cents = Similarity.kmeansCells(emb, k = 4, iters = 10)
-    // Each Lloyd's round localCheckpoints the k-row centroid frame, so the
+    // Each Lloyd's round materializes the k-row centroid frame, so the
     // final plan is a scan of materialized partitions — not 10 stacked
     // assign+average subtrees.
     val nodes = cents.queryExecution.analyzed.collect { case n => n }.size
